@@ -6855,7 +6855,9 @@ def _materialize_repeated_ctes(sql: str) -> str:
     import re as _re
 
     defs = []
-    for m in _re.finditer(r"(?<![\w.])([A-Za-z_]\w*)(\s*\([^()]*\))?\s+AS\s+\(", sql):
+    for m in _re.finditer(
+        r"(?<![\w.])([A-Za-z_]\w*)(\s*\([^()]*\))?\s+AS\s+\(", sql, _re.I
+    ):
         if sql[m.start() - 13 : m.start() - 1].upper().endswith("MATERIALIZED"):
             continue
         # find the definition body by matching parens from the "AS ("
@@ -6886,7 +6888,7 @@ def _materialize_repeated_ctes(sql: str) -> str:
             r"\b(?:FROM|JOIN)\s+" + name + r"\b", body, _re.I
         ))
         if refs >= 2 and not self_ref:
-            # rewrite "<name> [cols] AS (" -> "... AS MATERIALIZED ("
+            # rewrite "<name> [cols] AS (" (either case) -> "... AS MATERIALIZED ("
             head = out[start:end]
             out = out[:start] + head[:-1].rstrip()[:-2] + "AS MATERIALIZED (" + out[end:]
     return out

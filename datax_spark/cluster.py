@@ -13,7 +13,8 @@ cluster the swap is
     IceTable MERGE    →  IcebergMergePlan.apply(...)    (foreachBatch)
 
 and ``streaming.driver.run_structured`` already drives apply_epoch from
-``foreachBatch``, so only the two endpoints differ.
+``foreachBatch`` over a file tail (event parquet, or Debezium envelope
+lines given a row schema), so only the two endpoints differ.
 
 Parity notes (tbs005/DataX, reference README.md:2 — the platform's
 reader/writer plugin model): a DataX job names a reader and a writer in

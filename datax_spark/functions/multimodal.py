@@ -50,6 +50,10 @@ META_SCHEMA = T.StructType(
 
 _MODALITIES = ("image", "audio", "video")
 
+# what a decoder may raise on a corrupt or unsupported payload: every
+# per-row stage routes these to a failed row instead of killing the task
+_ROUTED = (NotImplementedError, ValueError, EOFError, wave.Error)
+
 
 # --------------------------- format sniffing --------------------------- #
 
@@ -749,7 +753,7 @@ def decode_meta(
                 }
                 try:
                     d = decode_payload(raw)
-                except (NotImplementedError, ValueError, EOFError, wave.Error):
+                except _ROUTED:
                     rows.append(rec)
                     continue
                 rec["modality"] = d["modality"]
@@ -826,7 +830,7 @@ def resize_images(
                         arr = np.repeat(arr[:, :, None], 3, axis=2)
                     payloads.append(encode_ppm(arr))
                     oks.append(True)
-                except (NotImplementedError, ValueError):
+                except _ROUTED:
                     payloads.append(None)
                     oks.append(False)
             yield pd.DataFrame(

@@ -230,7 +230,6 @@ class IceTable:
         # manifest/bloom files are immutable (uuid-named, written once),
         # so caching by path is always safe
         self._manifest_cache: dict[str, list[dict]] = {}
-        self._bloom_cache: dict[str, dict] = {}
         self._bloom_words_cache: dict[str, tuple[int, dict[int, int]]] = {}
         # writer-fence generation this handle holds (None = unfenced
         # legacy writer; commit() skips the lease check)
@@ -2179,8 +2178,7 @@ class IceTable:
     # actually probes its files, the probe reads sidecars as a
     # distributed parquet scan (word maps never transit the driver), and
     # the probe's relation setup is O(staging calls) not O(probed
-    # files). Legacy .bloom.json sidecars from older tables still probe
-    # via the driver-built fallback in bloom_prune.
+    # files).
     BLOOM_K = 4
     BLOOM_BITS_PER_KEY = 10
     BLOOM_MAX_BITS = 1 << 20
@@ -2219,19 +2217,13 @@ class IceTable:
         p = self.root / rel
         if not p.exists():
             return None
-        if rel.endswith(".parquet"):
-            t = pq.read_table(p, columns=["path", "m", "word_idx", "bits"])
-            for i in range(t.num_rows):
-                m = t.column("m")[i].as_py()
-                words = dict(
-                    zip(t.column("word_idx")[i].as_py(), t.column("bits")[i].as_py())
-                )
-                self._cache_sidecar_words((rel, t.column("path")[i].as_py()), (m, words))
-        else:  # legacy .bloom.json
-            b = json.loads(p.read_text())
-            self._cache_sidecar_words(
-                ck, (int(b["m"]), {int(w): int(x) for w, x in b["words"].items()})
+        t = pq.read_table(p, columns=["path", "m", "word_idx", "bits"])
+        for i in range(t.num_rows):
+            m = t.column("m")[i].as_py()
+            words = dict(
+                zip(t.column("word_idx")[i].as_py(), t.column("bits")[i].as_py())
             )
+            self._cache_sidecar_words((rel, t.column("path")[i].as_py()), (m, words))
         return self._bloom_words_cache.get(ck)
 
     def _cache_sidecar_words(self, ck, val) -> None:
@@ -2452,67 +2444,34 @@ class IceTable:
             return files
         key = self.key_column
 
-        # parquet sidecars (current format): the word maps stay JVM-side
-        # — one distributed scan of exactly the probed files' sidecars,
-        # no per-epoch Python→JVM transfer of O(candidate files · bloom
-        # bytes). JSON sidecars (legacy tables) fall back to the
-        # driver-built rows.
-        pq_side = [f for f in testable if f["bloom"].endswith(".parquet")]
-        js_side = [f for f in testable if not f["bloom"].endswith(".parquet")]
-        parts: list[DataFrame] = []
-        if pq_side:
-            sidecar_schema = T.StructType(
-                [
-                    T.StructField("path", T.StringType()),
-                    T.StructField("pid", T.IntegerType()),
-                    T.StructField("m", T.LongType()),
-                    T.StructField("word_idx", T.ArrayType(T.LongType())),
-                    T.StructField("bits", T.ArrayType(T.LongType())),
-                ]
+        # the word maps stay JVM-side — one distributed scan of exactly
+        # the probed files' sidecars, no per-epoch Python→JVM transfer of
+        # O(candidate files · bloom bytes)
+        sidecar_schema = T.StructType(
+            [
+                T.StructField("path", T.StringType()),
+                T.StructField("pid", T.IntegerType()),
+                T.StructField("m", T.LongType()),
+                T.StructField("word_idx", T.ArrayType(T.LongType())),
+                T.StructField("bits", T.ArrayType(T.LongType())),
+            ]
+        )
+        # consolidated sidecars: many probed files share one sidecar
+        # parquet — dedupe before the scan so relation setup is
+        # O(staging calls), not O(probed files). Rows for files not
+        # under probe may come along; their hits are ignored (kept
+        # filters over ``files``).
+        side_paths = sorted({str(self.root / f["bloom"]) for f in testable})
+        blooms = F.broadcast(
+            self.spark.read.schema(sidecar_schema)
+            .parquet(*side_paths)
+            .select(
+                "path",
+                "pid",
+                "m",
+                F.map_from_arrays("word_idx", "bits").alias("words"),
             )
-            # consolidated sidecars: many probed files share one sidecar
-            # parquet — dedupe before the scan so relation setup is
-            # O(staging calls), not O(probed files). Rows for files not
-            # under probe may come along; their hits are ignored (kept
-            # filters over ``files``).
-            side_paths = sorted({str(self.root / f["bloom"]) for f in pq_side})
-            parts.append(
-                self.spark.read.schema(sidecar_schema)
-                .parquet(*side_paths)
-                .select(
-                    "path",
-                    "pid",
-                    "m",
-                    F.map_from_arrays("word_idx", "bits").alias("words"),
-                )
-            )
-        if js_side:
-
-            def _bloom(rel: str) -> dict:
-                b = self._bloom_cache.get(rel)
-                if b is None:
-                    b = json.loads((self.root / rel).read_text())
-                    self._bloom_cache[rel] = b
-                return b
-
-            rows = []
-            for f in js_side:
-                b = _bloom(f["bloom"])
-                rows.append(
-                    (
-                        f["path"],
-                        f["partition_id"],
-                        b["m"],
-                        {int(w): int(x) for w, x in b["words"].items()},
-                    )
-                )
-            parts.append(
-                self.spark.createDataFrame(
-                    rows, "path string, pid int, m long, words map<long,bigint>"
-                )
-            )
-        blooms = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        blooms = F.broadcast(blooms)
+        )
         keys = keys_df.select(
             F.col(key), url_partition(F.col(key), self.num_partitions).alias("pid")
         )

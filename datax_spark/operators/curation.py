@@ -223,8 +223,9 @@ def _stage_rows(agg_df: DataFrame, names: list[str]) -> DataFrame:
         *[
             F.struct(
                 F.lit(names[s]).alias("stage"),
-                F.col(f"d{s}").cast("long").alias("n_docs"),
-                F.col(f"t{s}").cast("long").alias("n_tokens"),
+                # a stage that retains no docs sums to NULL: report 0
+                F.coalesce(F.col(f"d{s}").cast("long"), F.lit(0)).alias("n_docs"),
+                F.coalesce(F.col(f"t{s}").cast("long"), F.lit(0)).alias("n_tokens"),
             )
             for s in range(len(names))
         ]
@@ -337,17 +338,9 @@ def full_prep_funnel(
         stage.otherwise(F.lit(n_stages - 1)).alias("_stage"), "n_tokens"
     )
     agg = tagged.agg(
+        *[F.sum(F.when(F.col("_stage") >= s, F.lit(1))).alias(f"d{s}") for s in range(n_stages)],
         *[
-            F.coalesce(
-                F.sum(F.when(F.col("_stage") >= s, F.lit(1))), F.lit(0)
-            ).alias(f"d{s}")
-            for s in range(n_stages)
-        ],
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("_stage") >= s, F.col("n_tokens"))),
-                F.lit(0),
-            ).alias(f"t{s}")
+            F.sum(F.when(F.col("_stage") >= s, F.col("n_tokens"))).alias(f"t{s}")
             for s in range(n_stages)
         ],
     )
@@ -544,17 +537,9 @@ def funnel(
         .select(stage.alias("_stage"), "n_tokens")
     )
     agg = tagged.agg(
+        *[F.sum(F.when(F.col("_stage") >= s, F.lit(1))).alias(f"d{s}") for s in range(4)],
         *[
-            F.coalesce(
-                F.sum(F.when(F.col("_stage") >= s, F.lit(1))), F.lit(0)
-            ).alias(f"d{s}")
-            for s in range(4)
-        ],
-        *[
-            F.coalesce(
-                F.sum(F.when(F.col("_stage") >= s, F.col("n_tokens"))),
-                F.lit(0),
-            ).alias(f"t{s}")
+            F.sum(F.when(F.col("_stage") >= s, F.col("n_tokens"))).alias(f"t{s}")
             for s in range(4)
         ],
     )

@@ -103,8 +103,11 @@ def _from_wire(field: T.StructField, src: Column) -> Column:
 def _to_wire(field: T.StructField, col: Column) -> Column:
     if isinstance(field.dataType, T.BinaryType):
         return F.base64(col).alias(field.name)
-    if isinstance(field.dataType, T.TimestampType):
-        return F.unix_micros(col).alias(field.name)
+    if isinstance(field.dataType, (T.TimestampType, T.TimestampNTZType)):
+        # a zone-less timestamp (what spark infers for a parquet
+        # timestamp without UTC adjustment) would otherwise go out as an
+        # ISO string the parser reads back as null
+        return F.unix_micros(col.cast("timestamp")).alias(field.name)
     return col.alias(field.name)
 
 

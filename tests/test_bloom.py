@@ -65,38 +65,20 @@ def test_bloom_prunes_untouched_files_in_merge(spark, tmp_path):
     assert len(got) == len(set(got)) == 70
 
 
-def test_bloom_sidecars_are_parquet_and_legacy_json_still_probes(spark, tmp_path):
-    """Current sidecars are parquet (probed JVM-side); a legacy table
-    whose manifest references .bloom.json sidecars must keep probing
-    correctly through the driver-built fallback — including a mixed
-    manifest (half parquet, half rewritten to json)."""
-    import json as _json
-
-    import pyarrow.parquet as _pq
-
+def test_bloom_sidecars_are_parquet_and_probe(spark, tmp_path):
+    """Sidecars are parquet (probed JVM-side): every batch key hits, and
+    a miss-only batch prunes every file."""
     table = IceTable.create(spark, tmp_path / "t", PAGE_SCHEMA, num_partitions=2)
     urls = [f"https://a/{i}" for i in range(50)]
     apply_epoch(table, _batch(spark, urls, 1), 0)
     files = table.manifest_entries()
     assert all(f["bloom"].endswith(".bloom.parquet") for f in files)
 
-    # rewrite ONE sidecar to the legacy json format in place
-    legacy = files[0]
-    side = _pq.read_table(str(table.root / legacy["bloom"])).to_pylist()[0]
-    payload = {
-        "m": side["m"],
-        "k": side["k"],
-        "words": {str(w): b for w, b in zip(side["word_idx"], side["bits"])},
-    }
-    jrel = legacy["bloom"].replace(".bloom.parquet", ".bloom.json")
-    (table.root / jrel).write_text(_json.dumps(payload))
-    legacy["bloom"] = jrel
-
     keys = spark.createDataFrame([(u,) for u in urls], "url string")
     kept = table.bloom_prune(files, keys)
-    # no false negatives on either format: everything still hits
+    # no false negatives: everything still hits
     assert {f["path"] for f in kept} == {f["path"] for f in files}
-    # and a miss-only batch prunes both formats' files
+    # and a miss-only batch prunes every file
     misses = spark.createDataFrame([(f"https://zz/{i}",) for i in range(20)], "url string")
     assert table.bloom_prune(files, misses) == []
 

@@ -62,6 +62,12 @@ def test_funnel_counts(planted):
     toks = [rows[s]["n_tokens"] for s in ("raw", "lang_quality", "exact_dedup", "near_dup")]
     assert toks == sorted(toks, reverse=True)
     assert rows["near_dup"]["n_tokens"] > 0
+    # stages that retain no docs report 0, never NULL
+    dropped = {
+        r["stage"]: (r["n_docs"], r["n_tokens"])
+        for r in CUR.funnel(planted.filter(F.col("doc_id") >= 6)).collect()
+    }
+    assert dropped["lang_quality"] == dropped["near_dup"] == (0, 0)
 
 
 def test_curate_keeps_expected_ids(planted):

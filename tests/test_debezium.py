@@ -132,7 +132,7 @@ def test_readstream_wire_ingest(spark, event_log, tmp_path):
 
     from datax_spark.datagen.generator import reference_apply
     from datax_spark.icetable.table import IceTable
-    from datax_spark.streaming.driver import run_structured_wire
+    from datax_spark.streaming.driver import run_structured
 
     import os
     import shutil
@@ -163,9 +163,7 @@ def test_readstream_wire_ingest(spark, event_log, tmp_path):
         T.StructType(page_schema.fields + [T.StructField("title", T.StringType())]),
         num_partitions=4,
     )
-    run_structured_wire(
-        spark, wire, table, tmp_path / "ckpt", ROW_SCHEMA, extract=False
-    )
+    run_structured(spark, wire, table, tmp_path / "ckpt", row_schema=ROW_SCHEMA)
 
     events = []
     for p in sorted(event_log.glob("events-e*.parquet")):
@@ -179,9 +177,7 @@ def test_readstream_wire_ingest(spark, event_log, tmp_path):
 
     # checkpoint resume over the same file set: no new snapshot
     v = table.current_version()
-    run_structured_wire(
-        spark, wire, table, tmp_path / "ckpt", ROW_SCHEMA, extract=False
-    )
+    run_structured(spark, wire, table, tmp_path / "ckpt", row_schema=ROW_SCHEMA)
     assert table.current_version() == v
 
 

@@ -14,7 +14,7 @@ from datax_spark.datagen.generator import EventLogSpec, generate_event_log
 from datax_spark.icetable.table import IceTable
 from datax_spark.operators.text_index import Bm25Index
 from datax_spark.operators.trigram_index import TrigramIndex
-from datax_spark.streaming.driver import EpochDriver
+from datax_spark.streaming.driver import EpochDriver, Maintenance
 from datax_spark.streaming.source import ChangeTailSource
 
 SCHEMA = T.StructType(
@@ -280,14 +280,10 @@ def test_ttl_retention_deletes_expired_rows(spark, tmp_path):
         ),
         epoch=0,
     )
-    drv = EpochDriver(
-        spark,
-        ChangeTailSource(spark, tmp_path / "events-none"),
-        table,
-        tmp_path / "ckpt",
-        ttl={"column": "warc_ts", "maxAgeSeconds": 30 * 86400, "every": 1},
+    maint = Maintenance(
+        table, ttl={"column": "warc_ts", "maxAgeSeconds": 30 * 86400, "every": 1}
     )
-    drv._maybe_ttl(0)
+    maint.tick(0)
     left = {r["url"] for r in table.read().collect()}
     assert left == {"u-new1", "u-new2"}
     # changelog-visible: the expiry is ordinary D events
@@ -297,7 +293,7 @@ def test_ttl_retention_deletes_expired_rows(spark, tmp_path):
     }
     # second tick: manifest stats say nothing expires — version stable
     v = table.current_version()
-    drv._maybe_ttl(0)
+    maint.tick(0)
     assert table.current_version() == v
 
 
@@ -335,33 +331,25 @@ def test_ttl_retention_date_column(spark, tmp_path):
         ),
         epoch=0,
     )
-    drv = EpochDriver(
-        spark,
-        ChangeTailSource(spark, tmp_path / "events-none"),
-        table,
-        tmp_path / "ckpt",
-        ttl={"column": "seen_on", "maxAgeSeconds": 30 * 86400, "every": 1},
+    maint = Maintenance(
+        table, ttl={"column": "seen_on", "maxAgeSeconds": 30 * 86400, "every": 1}
     )
-    drv._maybe_ttl(0)
+    maint.tick(0)
     left = {r["url"] for r in table.read().collect()}
     assert left == {"u-new1", "u-new2"}
     # second tick: stats fast path says nothing expires — version stable
     v = table.current_version()
-    drv._maybe_ttl(0)
+    maint.tick(0)
     assert table.current_version() == v
 
     # sub-day TTL on a DATE column must CEIL to a whole day, never
     # floor: a floored 12h age would delete every row not bearing the
     # newest date — including rows minutes old. Retention may keep
     # longer than asked, never shorter.
-    drv_subday = EpochDriver(
-        spark,
-        ChangeTailSource(spark, tmp_path / "events-none2"),
-        table,
-        tmp_path / "ckpt2",
-        ttl={"column": "seen_on", "maxAgeSeconds": 12 * 3600, "every": 1},
+    subday = Maintenance(
+        table, ttl={"column": "seen_on", "maxAgeSeconds": 12 * 3600, "every": 1}
     )
     v = table.current_version()
-    drv_subday._maybe_ttl(0)
+    subday.tick(0)
     assert table.current_version() == v  # hi-1day >= cutoff: kept
     assert {r["url"] for r in table.read().collect()} == {"u-new1", "u-new2"}

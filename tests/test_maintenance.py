@@ -8,7 +8,7 @@ from pyspark.sql import types as T
 
 from datax_spark.datagen.generator import EventLogSpec, generate_event_log
 from datax_spark.icetable.table import IceTable
-from datax_spark.streaming.driver import EpochDriver
+from datax_spark.streaming.driver import EpochDriver, Maintenance
 from datax_spark.streaming.source import ChangeTailSource
 
 PAGE_SCHEMA = T.StructType(
@@ -160,8 +160,6 @@ def test_driver_delete_debt_triggered_compaction(spark, tmp_path):
     import datetime as dt
 
     from datax_spark.operators.merge import apply_epoch
-    from datax_spark.streaming.driver import EpochDriver
-    from datax_spark.streaming.source import ChangeTailSource
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -181,11 +179,7 @@ def test_driver_delete_debt_triggered_compaction(spark, tmp_path):
         [(900 + i, "D", f"https://d/{i}", ts, None, "en") for i in range(30)], ev
     ), 1, merge_strategy="mor")
     assert table.delete_entries()
-    drv = EpochDriver(
-        spark, ChangeTailSource(spark, tmp_path / "noev"), table, tmp_path / "ckpt",
-        max_delete_debt=0.1,
-    )
-    drv._maybe_maintain(epoch=1)
+    Maintenance(table, max_delete_debt=0.1).tick(epoch=1)
     assert table.delete_entries() == []
     assert table.read().count() == 70
 
@@ -212,10 +206,7 @@ def test_delete_debt_trigger_is_staggered(spark, tmp_path):
         ),
         0,
     )
-    drv = EpochDriver(
-        spark, ChangeTailSource(spark, tmp_path / "noev"), table, tmp_path / "ckpt",
-        max_delete_debt=0.1,
-    )
+    maint = Maintenance(table, max_delete_debt=0.1)
     fired: list[tuple[int, int]] = []
     orig = table.compact_partition
     epoch = 0
@@ -228,7 +219,7 @@ def test_delete_debt_trigger_is_staggered(spark, tmp_path):
             for j in range(20)
         ]
         apply_epoch(table, spark.createDataFrame(batch, ev), epoch, merge_strategy="mor")
-        drv._maybe_maintain(epoch)
+        maint.tick(epoch)
     assert fired, "debt trigger never fired"
     by_epoch: dict[int, set[int]] = {}
     for e, pid in fired:

@@ -195,7 +195,7 @@ def test_decode_meta_real(media_payloads):
     assert rows[4]["n_bytes"] == len(b"not media at all")
 
 
-def test_resize_images_real(media_payloads):
+def test_resize_images_real(spark, media_payloads):
     rows = {r["doc_id"]: r for r in resize_images(media_payloads, 8, 8).collect()}
     # images resized to canonical PPM at the target dims
     for doc_id, fill in ((1, 10), (2, 200)):
@@ -206,6 +206,11 @@ def test_resize_images_real(media_payloads):
     # audio/video/garbage rows are routed, not raised
     for doc_id in (0, 3, 4):
         assert not rows[doc_id]["ok"] and rows[doc_id]["payload"] is None
+    # so are RIFF headers the wave module rejects (wave.Error at a
+    # 12-byte cut, EOFError at 20)
+    wav, _ = make_wav(n=100, rate=8000)
+    bad = spark.createDataFrame([(5, wav[:12]), (6, wav[:20])], "doc_id long, payload binary")
+    assert [r["ok"] for r in resize_images(bad, 8, 8).orderBy("doc_id").collect()] == [False, False]
 
 
 def test_sample_frames_real(media_payloads):

@@ -195,3 +195,13 @@ def test_ivfpq_probe_never_reads_float_vectors(spark, tmp_path):
     scans = [ln for ln in plan.splitlines()
              if "ReadSchema" in ln and "codes" in ln]
     assert scans and all("embedding" not in ln for ln in scans)
+
+
+def test_repeated_ctes_materialize_in_either_case():
+    """The oracle guard against DuckDB's exponential inlining of repeated
+    CTE references finds definitions written in lower case too."""
+    from __spark_entry__ import _materialize_repeated_ctes
+
+    for as_kw in ("AS", "as"):
+        sql = f"WITH a {as_kw} (SELECT 1 AS v) SELECT * FROM a JOIN a b ON TRUE"
+        assert "WITH a AS MATERIALIZED (SELECT 1 AS v)" in _materialize_repeated_ctes(sql)

@@ -8,11 +8,14 @@ evolution mid-stream must survive replay.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import types as T
 
 from datax_spark.datagen.generator import EventLogSpec, generate_event_log
 from datax_spark.icetable.table import IceTable
+from datax_spark.sources.debezium import to_debezium
 from datax_spark.streaming.driver import EpochDriver, run_structured
 from datax_spark.streaming.source import ChangeTailSource
 
@@ -24,6 +27,12 @@ PAGE_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
         T.StructField("lang", T.StringType()),
     ]
+)
+
+# Debezium row payload: lsn/op ride the envelope, text is extracted
+WIRE_ROW_SCHEMA = T.StructType(
+    [f for f in PAGE_SCHEMA.fields if f.name != "text"]
+    + [T.StructField("title", T.StringType())]
 )
 
 SPEC = EventLogSpec(
@@ -122,19 +131,43 @@ def test_duplicate_epoch_injection(spark, log_dir, reference_run):
     assert _state(table) == ref_state
 
 
-def test_structured_streaming_runner(spark, log_dir, reference_run):
-    """The same sink driven by real readStream+foreachBatch. The file
+@pytest.fixture(scope="module")
+def wire_dir(spark, log_dir):
+    """The same log as Debezium envelope JSON lines, one file per epoch,
+    mtime-ordered so the file source delivers one batch per epoch, oldest
+    first (the per-key LSN order a url-keyed topic gives)."""
+    wire = log_dir / "wire"
+    wire.mkdir()
+    for i, shard in enumerate(sorted((log_dir / "events").glob("events-e*.parquet"))):
+        ev = spark.read.parquet(str(shard))
+        dst = wire / f"{i:05d}.txt"
+        dst.write_text("".join(r.value + "\n" for r in to_debezium(ev).collect()))
+        os.utime(dst, (1_700_000_000 + i * 60,) * 2)
+    return wire
+
+
+@pytest.mark.parametrize("source", ["parquet", "wire"])
+def test_structured_streaming_runner(spark, log_dir, reference_run, source, request):
+    """The same sink driven by real readStream+foreachBatch, tailing the
+    event parquet or the same log as Debezium envelope lines. The file
     source fixes the schema up front, so pre-evolution batches carry
     title=null rather than absent — final state equal on all other
-    columns and on title where the native run has values."""
+    columns and on title where the native run has values. The wire case
+    runs with snapshot expiry on: the shared Maintenance ticks after
+    every micro-batch."""
     _, _, ref_state = reference_run
-    base = log_dir
+    base = log_dir / f"ss-{source}"
+    if source == "parquet":
+        src, kw = log_dir / "events", {}
+    else:
+        src = request.getfixturevalue("wire_dir")
+        kw = {"row_schema": WIRE_ROW_SCHEMA, "expire_keep_last": 2}
     table = IceTable.create(
-        spark, base / "ss" / "table",
+        spark, base / "table",
         T.StructType(PAGE_SCHEMA.fields + [T.StructField("title", T.StringType())]),
         num_partitions=4,
     )
-    run_structured(spark, base / "events", table, base / "ss" / "ckpt")
+    run_structured(spark, src, table, base / "ckpt", **kw)
     got = _state(table)
     assert len(got) == len(ref_state)
     # compare ignoring title (fixed-schema source nulls it pre-evolution)
@@ -144,13 +177,18 @@ def test_structured_streaming_runner(spark, log_dir, reference_run):
         return [t[:i] + t[i + 1:] for t in states]
     ref_table = reference_run[0]
     assert drop_title(got, table) == drop_title(ref_state, ref_table)
+    if "expire_keep_last" in kw:
+        versions = [h["version"] for h in table.history()]
+        assert versions == [table.current_version() - 1, table.current_version()]
+    # maintenance needs no checkpoint of its own
+    assert sorted(p.name for p in base.iterdir()) == ["ckpt", "table"]
 
     # checkpoint resume: re-running the same query over the same shard
     # set must be a no-op — the streaming checkpoint (not the table's
     # idempotence ledger) skips the consumed files, so no new snapshot
     # commits and the state is bit-identical
     v_before = table.current_version()
-    run_structured(spark, base / "events", table, base / "ss" / "ckpt")
+    run_structured(spark, src, table, base / "ckpt", **kw)
     assert table.current_version() == v_before
     assert _state(table) == got
 
@@ -163,7 +201,7 @@ def test_structured_crash_after_table_commit(
     recorded the batch commit. On restart SS re-delivers the batch
     under the same id and the table's idempotence ledger must fold it
     to a no-op — final state identical to an uninterrupted run. Same
-    injection shape as tools/endurance_structured.py, pytest scale."""
+    injection shape as tools/endurance.py --source structured, pytest scale."""
     from datax_spark.streaming import driver as drv_mod
 
     base = log_dir
