@@ -5467,7 +5467,7 @@ FROM (SELECT *, MAX(ratio) OVER () AS mr FROM r)""",
     "lm_score_corpus": """
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(text), '\s+'),
+         list_filter(regexp_split_to_array(lower(text), '\\s+'),
                      x -> x <> '') AS ts
   FROM documents
 ),

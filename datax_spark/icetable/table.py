@@ -66,6 +66,7 @@ from typing import Any
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -684,6 +685,25 @@ class IceTable:
     # ------------------------------------------------------------------ #
     # read path
     # ------------------------------------------------------------------ #
+    def _local_df(self, rows: list[tuple], schema: T.StructType) -> DataFrame:
+        """Driver-built rows as a JVM ``LocalRelation``, via an Arrow
+        table. ``createDataFrame(<python list>)`` plans a PythonRDD scan
+        instead: every job touching it waits ~0.25 s for a Python worker
+        before its first row, and broadcasting it costs a job of its
+        own. A LocalRelation broadcasts from the driver with no job and
+        no worker, whatever ``arrow.pyspark.enabled`` says. Every
+        relation this class builds from driver rows goes through here,
+        so its reads start no Python worker."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*rows)) or [()] * len(schema.fields)
+        tbl = pa.table(
+            [pa.array(list(c), f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+        return self.spark.createDataFrame(tbl, schema)
+
     def read(self, version: int | None = None, with_lsn: bool = False) -> DataFrame:
         return self._read_files(
             self.manifest_entries(version),
@@ -715,7 +735,7 @@ class IceTable:
             keys_df = keys.select(key)
         else:
             kt = {f.name: f.dataType for f in self.schema(version).fields}[key]
-            keys_df = self.spark.createDataFrame(
+            keys_df = self._local_df(
                 [(k,) for k in keys], T.StructType([T.StructField(key, kt)])
             )
         pids = {
@@ -888,7 +908,7 @@ class IceTable:
         if with_lsn:
             schema = T.StructType(schema.fields + [T.StructField("_lsn", T.LongType(), True)])
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return self._local_df([], schema)
         # rename support: ONE scan requests current AND prior names (a
         # column absent in a given file reads as null per file), then a
         # coalesce folds the generations — no per-file dispatch, no
@@ -939,9 +959,11 @@ class IceTable:
         key = self.key_column
         _file = F.regexp_replace(F.input_file_name(), "^[a-zA-Z]+:(//)?", "")
         ae_map = F.broadcast(
-            self.spark.createDataFrame(
+            self._local_df(
                 [(str(self.root / f["path"]), int(f.get("added_epoch", 0))) for f in files],
-                "_file string, _ae long",
+                T.StructType(
+                    [T.StructField("_file", T.StringType()), T.StructField("_ae", T.LongType())]
+                ),
             )
         )
         # left join: an unmatched path (normalization drift) keeps the
@@ -950,9 +972,11 @@ class IceTable:
         # silently dropped
         df = _scan(files).withColumn("_file", _file).join(ae_map, "_file", "left")
         de_map = F.broadcast(
-            self.spark.createDataFrame(
+            self._local_df(
                 [(str(self.root / d["path"]), int(d["epoch"])) for d in deletes],
-                "_file string, _de long",
+                T.StructType(
+                    [T.StructField("_file", T.StringType()), T.StructField("_de", T.LongType())]
+                ),
             )
         )
         dk = (
@@ -972,7 +996,7 @@ class IceTable:
 
     def read_lineage(self) -> DataFrame:
         if not self.lineage_dir.exists() or not any(self.lineage_dir.iterdir()):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return self._local_df([], LINEAGE_SCHEMA)
         return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(self.lineage_dir / "*" / "*.parquet"))
 
     def write_quarantine(self, dirty: DataFrame, epoch: int) -> None:
@@ -1128,7 +1152,7 @@ class IceTable:
                 self.schema(to_version).fields
                 + [T.StructField("_lsn", T.LongType(), True)]
             )
-            state_a = self.spark.createDataFrame([], schema_lsn)
+            state_a = self._local_df([], schema_lsn)
             state_b = self.read(to_version, with_lsn=True)
             spec_a = spec_b = None
         else:
@@ -1609,7 +1633,9 @@ class IceTable:
             }
         # pids via the engine's own hash (one tiny job — never reimplement
         # murmur3 driver-side and risk a seed drift)
-        kdf = self.spark.createDataFrame([(k,) for k in keys], f"{key} string")
+        kdf = self._local_df(
+            [(k,) for k in keys], T.StructType([T.StructField(key, T.StringType())])
+        )
         pids = {
             r["p"]
             for r in kdf.select(
@@ -2343,8 +2369,14 @@ class IceTable:
             if pid not in old_by_pid:
                 m_by_pid[pid] = self._bloom_m_for_rows(nk)
                 maps_by_pid[pid] = []
+        # the job inherits the caller's local properties (job group,
+        # description, pool) — a plain pool thread would drop them, and
+        # cancelJobGroup would miss the compose job. Submitted through a
+        # lambda so the job's call site names this line, not the pool's
+        # thread.py (Spark names a job after the frame entering pyspark)
+        words = inheritable_thread_target(self.spark)(self._bloom_words_for_keys)
         ex = ThreadPoolExecutor(max_workers=1)
-        fut = ex.submit(self._bloom_words_for_keys, keys_df, m_by_pid)
+        fut = ex.submit(lambda: words(keys_df, m_by_pid))
         ex.shutdown(wait=False)  # future still completes; no cleanup path
         return (m_by_pid, maps_by_pid, fut)
 

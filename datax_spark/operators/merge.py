@@ -154,8 +154,11 @@ def apply_epoch(
     narrow = clean.select(key, "lsn", "op").withColumn(
         "_pid", url_partition(key, num_p)
     )
-    # per-key last op on narrow columns, reused lazily by the bloom /
-    # delete-key paths below: same winners as the wide resolve
+    # per-key last op on narrow columns, reused lazily by the delete-key
+    # path below: same winners as the wide resolve. The bloom probe and
+    # compose need only the key SET, which ``narrow`` already has — they
+    # read it directly and skip this Window's shuffle (duplicate keys
+    # set the same bloom bits and hit the same files)
     narrow_stats_strategy = "window" if lww_strategy == "auto" else lww_strategy
     narrow_last = lww_resolve(
         narrow, key=key, order="lsn", strategy=narrow_stats_strategy
@@ -266,9 +269,7 @@ def apply_epoch(
     # partition's [min,max] envelope. The probe is one extra narrow job,
     # so it is gated on batch size — dense batches hit every file anyway.
     total_keys = sum(r["n_keys"] for r in pid_rows)
-    keys_df = (
-        narrow_last.select(key) if 0 < total_keys <= bloom_prune_max_keys else None
-    )
+    keys_df = narrow.select(key) if 0 < total_keys <= bloom_prune_max_keys else None
     target, rewrite_files = table.read_partitions(
         affected, with_lsn=True, pid_url_ranges=envelopes, keys_df=keys_df
     )
@@ -380,12 +381,12 @@ def apply_epoch(
     # bloom maintenance stays O(batch): a new file's keys are exactly
     # (rewritten files' keys ∖ deletes) ∪ batch keys, so its bloom is
     # composed from the rewritten sidecars OR'd with a bloom of the
-    # batch keys (one narrow job over narrow_last) instead of re-reading
+    # batch keys (one narrow job over the batch keys) instead of re-reading
     # the rewritten partitions' key column — at 100 TB that re-read is
     # O(partition rows) per CoW epoch. Deleted keys linger as
     # false-positive bits until compaction's scan-path rebuild purges
     # them (conservative: blooms only ever over-keep files).
-    bloom_keys = narrow_last.select("_pid", key)
+    bloom_keys = narrow.select("_pid", key)
     if already:
         bloom_keys = bloom_keys.filter(~F.col("_pid").isin(*[int(p) for p in already]))
     # per-pid batch key counts: upper bound on a fresh pid's new-file

@@ -208,17 +208,59 @@ def test_composed_bloom_conservative_across_mor_and_deletes(spark, tmp_path):
     assert live == set(base) - set(base[3:6])
     files = table.manifest_entries()
     assert all(f.get("bloom") for f in files)
+    # which files physically hold each key: one scan of every data file
+    root = str(table.root) + "/"
+    holding: dict[str, set[str]] = {}
+    for r in (
+        spark.read.parquet(*[str(table.root / f["path"]) for f in files])
+        .select(F.input_file_name().alias("_f"), "url")
+        .collect()
+    ):
+        holding.setdefault(r["url"], set()).add(r["_f"].split(root, 1)[1])
     for u in sorted(live):
-        keys = spark.createDataFrame([(u,)], "url string")
+        keys = table._local_df([(u,)], T.StructType([T.StructField("url", T.StringType())]))
         kept = {f["path"] for f in table.bloom_prune(files, keys)}
-        holding = {
-            f["path"]
-            for f in files
-            if any(
-                r["url"] == u
-                for r in spark.read.parquet(str(table.root / f["path"]))
-                .select("url")
-                .collect()
-            )
-        }
-        assert holding <= kept, f"bloom false negative for {u}"
+        assert holding[u] <= kept, f"bloom false negative for {u}"
+
+
+def test_bloom_compose_job_joins_callers_job_group(spark, tmp_path):
+    """The bloom-compose job runs on a helper thread while the epoch's
+    data write runs; it must still carry the caller's job group (and
+    description, pool), or ``cancelJobGroup`` on an epoch misses it.
+    The compose job is found by its call site: a line of
+    ``_begin_bloom_compose`` or ``_bloom_words_for_keys``."""
+    import inspect
+
+    table = IceTable.create(spark, tmp_path / "t", PAGE_SCHEMA, num_partitions=2)
+    urls = [f"https://a/{i}" for i in range(200)]
+    apply_epoch(table, _batch(spark, urls, 1), 0)
+
+    path = inspect.getsourcefile(IceTable)
+    sites = set()
+    for fn in (IceTable._begin_bloom_compose, IceTable._bloom_words_for_keys):
+        src, first = inspect.getsourcelines(fn)
+        sites |= {f"{path}:{n}" for n in range(first, first + len(src))}
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def compose_jobs(ids) -> set[int]:
+        out = set()
+        for j in ids:
+            info = tracker.getJobInfo(j)
+            stages = [tracker.getStageInfo(s) for s in (info.stageIds if info else [])]
+            if any(s and any(s.name.endswith(site) for site in sites) for s in stages):
+                out.add(j)
+        return out
+
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    group = f"compose-{tmp_path.name}"
+    sc.setJobGroup(group, "bloom compose inherits the job group")
+    try:
+        s = apply_epoch(table, _batch(spark, urls[:3], 10_000, op="U"), 1)
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    assert s.merge_mode == "mor"
+    in_group = compose_jobs(tracker.getJobIdsForGroup(group))
+    leaked = compose_jobs(set(tracker.getJobIdsForGroup(None)) - ungrouped_before)
+    assert in_group and not leaked, (in_group, leaked)

@@ -205,3 +205,67 @@ def test_repeated_ctes_materialize_in_either_case():
     for as_kw in ("AS", "as"):
         sql = f"WITH a {as_kw} (SELECT 1 AS v) SELECT * FROM a JOIN a b ON TRUE"
         assert "WITH a AS MATERIALIZED (SELECT 1 AS v)" in _materialize_repeated_ctes(sql)
+
+
+def test_mor_read_side_tables_are_jvm_local_broadcasts(spark, tmp_path):
+    """Driver-built relations on the read path (the merge-on-read
+    added/delete-epoch side tables, lookup keys, the empty frame) plan
+    as JVM LocalRelations, not PythonRDD scans: a stage reading a
+    LogicalRDD waits for a Python worker before its first row. The side
+    tables stay broadcast hash joins — a BroadcastExchange directly over
+    a LocalTableScan. Plans only; nothing here runs the returned frames."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from datax_spark.icetable.table import IceTable
+    from datax_spark.operators.merge import apply_epoch
+
+    schema = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("warc_ts", T.TimestampType()),
+            T.StructField("html", T.BinaryType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("lang", T.StringType()),
+        ]
+    )
+    ev = "lsn long, op string, url string, warc_ts timestamp, html binary, lang string"
+    ts = dt.datetime(2026, 1, 1)
+    urls = [f"https://d{i % 5}.example.com/{i}" for i in range(120)]
+    table = IceTable.create(spark, tmp_path / "t", schema, num_partitions=2)
+    apply_epoch(
+        table,
+        spark.createDataFrame(
+            [(i + 1, "I", u, ts, f"<p>{i}</p>".encode(), "en") for i, u in enumerate(urls)],
+            ev,
+        ),
+        0,
+    )
+    apply_epoch(
+        table,
+        spark.createDataFrame([(1000 + i, "D", urls[i], ts, None, "en") for i in range(4)], ev),
+        1,
+    )
+    assert table.delete_entries(), "fixture must carry merge-on-read delete debt"
+
+    def local_broadcasts(df) -> int:
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        return sum(
+            "BroadcastExchange" in a and "LocalTableScan" in b
+            for a, b in zip(lines, lines[1:])
+        )
+
+    frames = {
+        "lookup": (table.lookup([urls[10], urls[11]]), 3),  # _ae, _de, keys
+        "scan": (table.scan([("lang", "=", "en")]), 2),
+        "read_partitions": (table.read_partitions({0, 1})[0], 2),
+        "read_files_empty": (table._read_files([], None, False), 0),
+    }
+    for name, (df, n_local) in frames.items():
+        logical = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in logical, f"{name}:\n{logical}"
+        assert "LocalRelation" in logical, f"{name}:\n{logical}"
+        assert local_broadcasts(df) == n_local, (
+            f"{name}:\n{df._jdf.queryExecution().executedPlan().toString()}"
+        )
