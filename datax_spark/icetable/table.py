@@ -689,11 +689,12 @@ class IceTable:
         """Driver-built rows as a JVM ``LocalRelation``, via an Arrow
         table. ``createDataFrame(<python list>)`` plans a PythonRDD scan
         instead: every job touching it waits ~0.25 s for a Python worker
-        before its first row, and broadcasting it costs a job of its
-        own. A LocalRelation broadcasts from the driver with no job and
-        no worker, whatever ``arrow.pyspark.enabled`` says. Every
-        relation this class builds from driver rows goes through here,
-        so its reads start no Python worker."""
+        before its first row. Broadcasting a LocalRelation still runs a
+        small JVM job (a ``ParallelCollectionRDD`` collect, up to one
+        task per core) but starts no Python worker, whatever
+        ``arrow.pyspark.enabled`` says. Every relation this class builds
+        from driver rows goes through here, so its reads start no Python
+        worker."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
         arrow_schema = to_arrow_schema(schema)
@@ -758,13 +759,19 @@ class IceTable:
         with_lsn: bool = False,
         pid_url_ranges: dict[int, tuple[str, str]] | None = None,
         keys_df: DataFrame | None = None,
+        old_keys: dict[int, int] | None = None,
     ) -> tuple[DataFrame, list[dict]]:
         """Pruned scan: only files in ``partition_ids``, and — when the
         per-partition batch url envelope is supplied — only files whose
         [min_url, max_url] overlaps their partition's envelope
-        (conservative: a skipped file provably contains no batch url).
-        Returns the DataFrame and the pruned-in file entries (the MERGE
-        rewrite set).
+        (conservative: a skipped file provably contains no batch url),
+        then the bloom probe of ``keys_df``. ``old_keys`` (per pid, the
+        batch keys that already exist in the table) skips the probe for
+        a file whose row share of its pid's candidates expects at least
+        ``BLOOM_SURE_HITS`` of them: P(prunable) ≈ e^-4 under uniform
+        spread, and a wrong keep costs one extra file read, never
+        correctness. Returns the DataFrame and the pruned-in file
+        entries (the MERGE rewrite set).
         """
         files = []
         for f in self.manifest_entries(version, partition_ids):
@@ -775,7 +782,20 @@ class IceTable:
                     continue
             files.append(f)
         if keys_df is not None:
-            files = self.bloom_prune(files, keys_df)
+            old_keys = old_keys or {}
+            pid_rows: dict[int, int] = {}
+            for f in files:
+                pid_rows[f["partition_id"]] = pid_rows.get(f["partition_id"], 0) + f["rows"]
+            keep = {
+                f["path"]
+                for f in files
+                if old_keys.get(f["partition_id"], 0) * f["rows"]
+                >= self.BLOOM_SURE_HITS * pid_rows[f["partition_id"]]
+            }
+            probe = [f for f in files if f["path"] not in keep]
+            if probe:
+                keep |= {f["path"] for f in self.bloom_prune(probe, keys_df)}
+                files = [f for f in files if f["path"] in keep]
         df = self._read_files(
             files,
             version,
@@ -2018,6 +2038,16 @@ class IceTable:
             .write.partitionBy(pid_column)
             .mode("overwrite")
         ).parquet(str(staging))
+        entries = self._publish_staged(
+            staging, pid_column, f"e{epoch:05d}", self._data_entry_fn(epoch)
+        )
+        self._attach_blooms(entries, pre=pre)
+        return entries
+
+    def _data_entry_fn(self, epoch: int):
+        """Manifest-entry builder for the staged data files of ``epoch``
+        (key envelope and column stats from the parquet footer)."""
+        key = self.key_column
         stats_schema = self._stats_schema()
 
         def entry(dest: Path, pid: int, meta: "pq.FileMetaData") -> dict:
@@ -2034,9 +2064,7 @@ class IceTable:
                 e["stats"] = _column_stats(meta, stats_schema, key)
             return e
 
-        entries = self._publish_staged(staging, pid_column, f"e{epoch:05d}", entry)
-        self._attach_blooms(entries, pre=pre)
-        return entries
+        return entry
 
     def _publish_staged(
         self,
@@ -2075,73 +2103,30 @@ class IceTable:
         shutil.rmtree(staging, ignore_errors=True)
         return entries
 
-    def stage_delete_files(
-        self, keys_df: DataFrame, epoch: int, pid_column: str = "_pid", aligned: bool = False
-    ) -> list[dict]:
-        """Write equality-delete files (merge-on-read): one narrow
-        parquet of keys per touched partition. A delete file written at
-        epoch E shadows its keys in data files with added_epoch < E —
-        applied by the read path's anti-join, folded by compaction.
-        Delete-file bytes are O(batch keys), which is what bounds write
-        amplification for delete-heavy / sparse-update epochs."""
-        staging = self.root / f"_staging-del-e{epoch:05d}-{uuid.uuid4().hex[:8]}"
-        key = self.key_column
-        df = keys_df.select(pid_column, key)
-        if not aligned:
-            df = df.repartition(self.num_partitions, F.col(key))
-        self._write_conf(
-            df.sortWithinPartitions(pid_column, key)
-            .write.partitionBy(pid_column)
-            .mode("overwrite")
-        ).parquet(str(staging))
-        def entry(dest: Path, pid: int, meta: "pq.FileMetaData") -> dict:
-            return {
-                "path": str(dest.relative_to(self.root)),
-                "partition_id": pid,
-                "rows": meta.num_rows,
-                "epoch": epoch,
-                "content": "equality-deletes",
-            }
-
-        return self._publish_staged(staging, pid_column, f"d-e{epoch:05d}", entry)
-
     def stage_data_and_delete_files(
         self,
         df: DataFrame,
-        delete_keys: DataFrame,
         epoch: int,
         pid_column: str = "_pid",
         aligned: bool = False,
         bloom_compose: tuple[DataFrame, dict[int, list[dict]], dict[int, int]] | None = None,
     ) -> tuple[list[dict], list[dict]]:
-        """Fused MoR epoch write: data rows AND equality-delete keys in
-        ONE staged Spark job (``partitionBy(_dl, pid)``) instead of two —
-        each job repeats the full per-epoch fixed cost (scheduling, the
-        narrow pruned-target guard scan, Python worker spin-up), which
-        dominates small epochs. The union's legs keep their own physical
-        partitioning (Spark unions concatenate partitions), so with
-        ``aligned=True`` every task still writes exactly one leaf
-        directory and no exchange is added. Delete-leg files carry the
-        data schema with nulls outside the key — the read path's delete
-        scan names an explicit key-only schema (``_read_files``), so the
-        wider footprint is read-identical to ``stage_delete_files``
-        output at a few null-column bytes per file. Returns
-        (data manifest entries, delete entries)."""
+        """Merge-on-read epoch write: ``df`` carries data rows
+        (``_dl = 0``) and equality-delete rows (``_dl = 1``: the key,
+        nulls elsewhere) and is written in ONE staged Spark job
+        (``partitionBy(_dl, pid)``), so with ``aligned=True`` each task
+        writes its pid's data file and at most one delete file. A delete
+        file written at epoch E shadows its keys in data files with
+        added_epoch < E — applied by the read path's anti-join, folded by
+        compaction — so delete-file bytes are O(batch keys), which bounds
+        write amplification for delete-heavy / sparse-update epochs.
+        Delete files carry the data schema with nulls outside the key;
+        the read path's delete scan names an explicit key-only schema
+        (``_read_files``). Returns (data manifest entries, delete
+        entries)."""
         key = self.key_column
-        del_leg = delete_keys.select(
-            *[
-                (
-                    F.col(f.name)
-                    if f.name in delete_keys.columns
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in df.schema.fields
-            ],
-            F.lit(1).alias("_dl"),
-        )
-        both = df.withColumn("_dl", F.lit(0)).unionByName(del_leg)
         if not aligned:
-            both = both.repartition(self.num_partitions, F.col(key))
+            df = df.repartition(self.num_partitions, F.col(key))
         pre = self._begin_bloom_compose(bloom_compose)
         staging = self.root / f"_staging-e{epoch:05d}-{uuid.uuid4().hex[:8]}"
         # sort leads with the partition columns (_dl, pid): the dynamic-
@@ -2149,26 +2134,10 @@ class IceTable:
         # own local sort — dropping the within-file key sort — if ours
         # didn't already satisfy it
         self._write_conf(
-            both.sortWithinPartitions("_dl", pid_column, key)
+            df.sortWithinPartitions("_dl", pid_column, key)
             .write.partitionBy("_dl", pid_column)
             .mode("overwrite")
         ).parquet(str(staging))
-
-        stats_schema = self._stats_schema()
-
-        def data_entry(dest: Path, pid: int, meta: "pq.FileMetaData") -> dict:
-            min_url, max_url = _key_stats(meta, key)
-            e = {
-                "path": str(dest.relative_to(self.root)),
-                "partition_id": pid,
-                "rows": meta.num_rows,
-                "min_url": min_url,
-                "max_url": max_url,
-                "added_epoch": epoch,
-            }
-            if stats_schema is not None:
-                e["stats"] = _column_stats(meta, stats_schema, key)
-            return e
 
         def del_entry(dest: Path, pid: int, meta: "pq.FileMetaData") -> dict:
             return {
@@ -2180,7 +2149,7 @@ class IceTable:
             }
 
         entries = self._publish_staged(
-            staging / "_dl=0", pid_column, f"e{epoch:05d}", data_entry
+            staging / "_dl=0", pid_column, f"e{epoch:05d}", self._data_entry_fn(epoch)
         )
         dels = self._publish_staged(
             staging / "_dl=1", pid_column, f"d-e{epoch:05d}", del_entry
@@ -2211,6 +2180,9 @@ class IceTable:
     # cap on cached sidecar word maps (compose path): bounds driver
     # memory at ~cache_max × 128 KB regardless of epoch count
     BLOOM_WORDS_CACHE_MAX = 256
+    # expected true hits (batch keys that already exist, spread by row
+    # share) at which read_partitions keeps a file without probing it
+    BLOOM_SURE_HITS = 4
 
     def _bloom_positions(self, key_col, m_col):
         return [

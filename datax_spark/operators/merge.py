@@ -151,18 +151,9 @@ def apply_epoch(
     # pass below, so payload bytes cross the engine exactly once.
     from datax_spark.operators.quarantine import dirty_predicate
 
-    narrow = clean.select(key, "lsn", "op").withColumn(
-        "_pid", url_partition(key, num_p)
-    )
-    # per-key last op on narrow columns, reused lazily by the delete-key
-    # path below: same winners as the wide resolve. The bloom probe and
-    # compose need only the key SET, which ``narrow`` already has — they
-    # read it directly and skip this Window's shuffle (duplicate keys
-    # set the same bloom bits and hit the same files)
-    narrow_stats_strategy = "window" if lww_strategy == "auto" else lww_strategy
-    narrow_last = lww_resolve(
-        narrow, key=key, order="lsn", strategy=narrow_stats_strategy
-    )
+    # the bloom probe and compose need only the batch key SET: duplicate
+    # keys set the same bloom bits and hit the same files
+    narrow = clean.select(key).withColumn("_pid", url_partition(key, num_p))
 
     per_key = (
         events.select(
@@ -176,6 +167,7 @@ def apply_epoch(
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.max_by("op", "lsn").alias("last_op"),
+            F.min_by("op", "lsn").alias("first_op"),
             F.max("lsn").alias("max_lsn"),
         )
     )
@@ -185,6 +177,11 @@ def apply_epoch(
             F.sum("n_rows").alias("rows_in"),
             F.count(F.lit(1)).alias("n_keys"),
             F.sum(F.when(F.col("last_op") == "D", 1).otherwise(0)).alias("n_del"),
+            # keys the source says already existed: their first op in
+            # the batch updates or deletes (read_partitions' probe skip)
+            F.sum(F.when(F.col("first_op").isin("U", "D"), 1).otherwise(0)).alias(
+                "n_old"
+            ),
             F.max("max_lsn").alias("max_lsn"),
             F.min("_k").alias("min_url"),
             F.max("_k").alias("max_url"),
@@ -271,7 +268,11 @@ def apply_epoch(
     total_keys = sum(r["n_keys"] for r in pid_rows)
     keys_df = narrow.select(key) if 0 < total_keys <= bloom_prune_max_keys else None
     target, rewrite_files = table.read_partitions(
-        affected, with_lsn=True, pid_url_ranges=envelopes, keys_df=keys_df
+        affected,
+        with_lsn=True,
+        pid_url_ranges=envelopes,
+        keys_df=keys_df,
+        old_keys={r["_pid"]: r["n_old"] for r in pid_rows},
     )
 
     # ---- strategy: copy-on-write vs merge-on-read ---------------------- #
@@ -294,39 +295,46 @@ def apply_epoch(
         # CoW join guard drops them, keeping the two modes bit-equivalent
         tn = target.select(F.col(key).alias("_tk"), F.col("_lsn").alias("_tlsn"))
         guard = F.col("_tlsn").isNull() | (F.col("lsn") > F.col("_tlsn"))
-        guarded = (
-            resolved.join(tn, resolved[key] == tn["_tk"], "left_outer")
-            .filter(guard)
-            .drop("_tk", "_tlsn")
+        guarded = resolved.join(tn, resolved[key] == tn["_tk"], "left_outer").filter(
+            guard
         )
 
         def _mor_value(c: str):
             if c == "text" and do_extract:
-                return extract_text_udf(F.col("html"))
+                return F.when(F.col("op") != "D", extract_text_udf(F.col("html")))
             if c in resolved.columns:
                 return F.col(c)
             return F.lit(None)
 
-        data_rows = guarded.filter(F.col("op") != "D").select(
+        # the same join yields both legs, tagged _dl: a data row per
+        # upsert, and an equality-delete row (key, nulls) per guarded key
+        # that EXISTS in the target (an upsert shadows its older copy; a
+        # delete removes it). Keys absent from the pruned target shadow
+        # nothing — pruning is conservative, so a missing key is provably
+        # absent from the whole partition — and including them would
+        # write one delete row per INSERT, inflating delete files and the
+        # driver's delete-debt metric into spurious compactions. Rows
+        # keep the join's pid-aligned partitioning, so each task writes
+        # its pid's data file and at most one delete file.
+        data_row = F.struct(
             *[_mor_value(c).alias(c) for c in out_cols],
             F.col("lsn").alias("_lsn"),
             F.col("_pid"),
+            F.lit(0).alias("_dl"),
         )
-        # equality-delete keys: guarded batch keys that EXIST in the
-        # target (an upsert shadows its older copies; a delete removes
-        # them). Keys absent from the pruned target shadow nothing —
-        # pruning is conservative, so a missing key is provably absent
-        # from the whole partition — and including them would write one
-        # delete row per INSERT, inflating delete files and the driver's
-        # delete-debt metric into spurious compactions. Built from the
-        # narrow projection so no payload bytes move.
-        nb = narrow_last
-        if already:
-            nb = nb.filter(~F.col("_pid").isin(*[int(p) for p in already]))
-        delete_keys = nb.join(tn, nb[key] == tn["_tk"], "inner").filter(
-            F.col("lsn") > F.col("_tlsn")
-        ).select("_pid", key)
-        merged = None
+        delete_row = F.struct(
+            *[(F.col(c) if c == key else F.lit(None)).alias(c) for c in out_cols],
+            F.lit(None).alias("_lsn"),
+            F.col("_pid"),
+            F.lit(1).alias("_dl"),
+        )
+        legs = F.array(
+            F.when(F.col("op") != "D", data_row),
+            F.when(F.col("_tlsn").isNotNull(), delete_row),
+        )
+        merged = guarded.select(
+            F.explode(F.filter(legs, lambda r: r.isNotNull())).alias("_r")
+        ).select("_r.*")
     else:
         b = resolved.alias("b")
         t = target.alias("t")
@@ -399,13 +407,12 @@ def apply_epoch(
             old_by_pid.setdefault(f["partition_id"], []).append(f)
     try:
         if use_mor:
-            # fused write: data rows + equality-delete keys in ONE Spark
-            # job — the second job repeated the whole per-epoch fixed
-            # cost (scheduling, the narrow guard scan, worker spin-up),
-            # ~2.6s/epoch of pure overhead at small batches
+            # one pass: data rows + equality-delete keys of the one
+            # guarded join in ONE Spark job — a second job or leg repeats
+            # the per-epoch fixed cost (scheduling, the guard scan, an
+            # LWW shuffle), which dominates small batches
             new_files, new_deletes = table.stage_data_and_delete_files(
-                data_rows,
-                delete_keys,
+                merged,
                 epoch,
                 aligned=True,
                 bloom_compose=(bloom_keys, old_by_pid, n_keys_by_pid),

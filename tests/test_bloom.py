@@ -46,7 +46,9 @@ def test_bloom_prunes_untouched_files_in_merge(spark, tmp_path):
     """urls 'a/...' and 'c/...' sandwich 'b/...': the epoch-1 batch (all
     b-urls) falls INSIDE epoch-0 files' [min,max] envelopes, so envelope
     pruning keeps them — the bloom must prune them instead (b-urls were
-    never written), leaving epoch-0 files intact in the manifest."""
+    never written), leaving epoch-0 files intact in the manifest. An
+    insert-only batch names no existing key, so the probe-skip rule
+    (read_partitions' ``old_keys``) must leave its probe in place."""
     table = IceTable.create(spark, tmp_path / "t", PAGE_SCHEMA, num_partitions=1)
     e0 = [f"https://a/{i}" for i in range(30)] + [f"https://c/{i}" for i in range(30)]
     apply_epoch(table, _batch(spark, e0, 1), 0)
@@ -139,6 +141,41 @@ def test_bloom_keeps_files_for_updates(spark, tmp_path):
     rows = {r["url"]: r for r in table.read(with_lsn=True).collect()}
     assert rows["https://a/2"]["_lsn"] == 100
     assert len(rows) == 2
+
+
+def test_update_heavy_mor_epoch_skips_the_probe(spark, tmp_path, monkeypatch):
+    """Keys whose first batch op is U or D already exist: when a file's
+    row share of them expects >= BLOOM_SURE_HITS true hits, the probe
+    cannot prune it, so no bloom_prune runs — and the final state equals
+    the one a probed apply reaches."""
+    urls = [f"https://a/{i}" for i in range(60)]
+    batch = [
+        (1000 + i, "U", u, TS, f"<p>v{i}</p>".encode(), "en")
+        for i, u in enumerate(urls[:20])
+    ]
+    batch += [(2000 + i, "D", u, TS, None, "en") for i, u in enumerate(urls[20:24])]
+    calls = []
+    prune = IceTable.bloom_prune
+
+    def spy(self, files, keys_df):
+        calls.append(len(files))
+        return prune(self, files, keys_df)
+
+    monkeypatch.setattr(IceTable, "bloom_prune", spy)
+    states = {}
+    sure_hits = getattr(IceTable, "BLOOM_SURE_HITS", 4)
+    for name, sure_hits in (("skip", sure_hits), ("probe", 10**9)):
+        monkeypatch.setattr(IceTable, "BLOOM_SURE_HITS", sure_hits, raising=False)
+        table = IceTable.create(spark, tmp_path / name, PAGE_SCHEMA, num_partitions=2)
+        apply_epoch(table, _batch(spark, urls, 1), 0)
+        del calls[:]
+        s = apply_epoch(table, spark.createDataFrame(batch, EV), 1, merge_strategy="mor")
+        assert s.merge_mode == "mor"
+        assert bool(calls) == (name == "probe"), (name, calls)
+        states[name] = sorted((r["url"], r["text"]) for r in table.read().collect())
+    assert states["skip"] == states["probe"]
+    assert len(states["skip"]) == 56
+    assert ("https://a/3", "v3") in states["skip"]
 
 
 def _sidecar_words(table, entry):

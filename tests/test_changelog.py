@@ -29,6 +29,20 @@ def _df(spark, rows, schema="url string, val long, _pid int, _lsn long"):
     return spark.createDataFrame(rows, schema)
 
 
+def _stage_mor(t, spark, epoch, rows=(), deletes=()):
+    """Stage one merge-on-read epoch: data rows ``(url, val, _pid,
+    _lsn)`` tagged ``_dl = 0`` and equality-delete keys ``(url, _pid)``
+    tagged ``_dl = 1``; returns (data entries, delete entries)."""
+    return t.stage_data_and_delete_files(
+        spark.createDataFrame(
+            [(u, v, p, l, 0) for (u, v, p, l) in rows]
+            + [(u, None, p, None, 1) for (u, p) in deletes],
+            "url string, val long, _pid int, _lsn long, _dl int",
+        ),
+        epoch=epoch,
+    )
+
+
 def _changes(t, a, b=None):
     return {
         r["url"]: (r["_op"], r["val"], r["_lsn"])
@@ -93,9 +107,7 @@ def test_mor_delete_surfaces_as_D(spark, tmp_path):
     t = _mk(spark, tmp_path / "t")
     f0 = t.stage_data_files(_df(spark, [("a", 1, 0, 1), ("b", 2, 0, 2)]), epoch=0)
     t.commit(0, {0}, f0)
-    dels = t.stage_delete_files(
-        spark.createDataFrame([("a", 0)], "url string, _pid int"), epoch=1
-    )
+    _, dels = _stage_mor(t, spark, 1, deletes=[("a", 0)])
     t.commit(1, {0}, [], added_deletes=dels)
     assert _changes(t, 1) == {"a": ("D", 1, 2)}  # pre-lsn 1 → feed lsn 2
 
@@ -248,13 +260,8 @@ def test_read_changes_matches_model_diff(spark, tmp_path_factory, ops, data):
         elif isinstance(op, dict):
             lsn += 1
             rows = [(k, v, 0 if k < "c" else 1, lsn) for k, v in sorted(op.items())]
-            files, dels = t.stage_data_and_delete_files(
-                spark.createDataFrame(rows, "url string, val long, _pid int, _lsn long"),
-                spark.createDataFrame(
-                    [(k, 0 if k < "c" else 1) for k in sorted(op)],
-                    "url string, _pid int",
-                ),
-                epoch=epoch,
+            files, dels = _stage_mor(
+                t, spark, epoch, rows, [(k, 0 if k < "c" else 1) for k in sorted(op)]
             )
             t.commit(epoch, {r[2] for r in rows}, files, added_deletes=dels)
             for k, v in op.items():
@@ -264,12 +271,9 @@ def test_read_changes_matches_model_diff(spark, tmp_path_factory, ops, data):
             present = [k for k in op if k in model]
             if not present:
                 continue
-            dels = t.stage_delete_files(
-                spark.createDataFrame(
-                    [(k, 0 if k < "c" else 1) for k in sorted(present)],
-                    "url string, _pid int",
-                ),
-                epoch=epoch,
+            _, dels = _stage_mor(
+                t, spark, epoch,
+                deletes=[(k, 0 if k < "c" else 1) for k in sorted(present)],
             )
             t.commit(epoch, {0 if k < "c" else 1 for k in present}, [],
                      added_deletes=dels)
@@ -322,9 +326,7 @@ def test_raw_append_after_mor_delete_is_legal(spark, tmp_path):
     delete) state, not the physical rows."""
     t = _mk(spark, tmp_path / "t")
     t.commit(0, {0}, t.stage_data_files(_df(spark, [("a", 1, 0, 1)]), epoch=0))
-    dels = t.stage_delete_files(
-        spark.createDataFrame([("a", 0)], "url string, _pid int"), epoch=1
-    )
+    _, dels = _stage_mor(t, spark, 1, deletes=[("a", 0)])
     t.commit(1, {0}, [], added_deletes=dels)
     t.commit(2, {0}, t.stage_data_files(_df(spark, [("a", 9, 0, 5)]), epoch=2))
     assert {r["url"]: r["val"] for r in t.read().collect()} == {"a": 9}
@@ -337,11 +339,7 @@ def test_mor_upsert_upsert_compact_changes_empty(spark, tmp_path):
     a phantom stale-value update."""
     t = _mk(spark, tmp_path / "t")
     for e, v in enumerate([0, 1]):
-        files, dels = t.stage_data_and_delete_files(
-            _df(spark, [("a", v, 0, e + 1)]),
-            spark.createDataFrame([("a", 0)], "url string, _pid int"),
-            epoch=e,
-        )
+        files, dels = _stage_mor(t, spark, e, [("a", v, 0, e + 1)], [("a", 0)])
         t.commit(e, {0}, files, added_deletes=dels)
     pre = t.current_version()
     assert t.compact(min_files=2) == [0]

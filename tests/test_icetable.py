@@ -26,6 +26,17 @@ def _df(spark, rows):
     )
 
 
+def _tagged(spark, rows=(), deletes=()):
+    """A merge-on-read staged frame: data rows ``(url, val, _pid, _lsn)``
+    tagged ``_dl = 0`` and equality-delete keys ``(url, _pid)`` tagged
+    ``_dl = 1``."""
+    return spark.createDataFrame(
+        [(u, v, p, l, 0) for (u, v, p, l) in rows]
+        + [(u, None, p, None, 1) for (u, p) in deletes],
+        "url string, val long, _pid int, _lsn long, _dl int",
+    )
+
+
 def test_create_load_roundtrip(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t2 = IceTable.load(spark, tmp_path / "t")
@@ -218,15 +229,14 @@ def test_lookup_point_reads(spark, tmp_path):
     v1 = t.current_version()
     pid3 = [r[2] for r in rows if r[0] == "u3"][0]
     files, dels = t.stage_data_and_delete_files(
-        _df(spark, [("u3", 33, pid3, 99)]),
-        spark.createDataFrame([("u3", pid3)], "url string, _pid int"),
-        epoch=1,
+        _tagged(spark, [("u3", 33, pid3, 99)], [("u3", pid3)]), epoch=1
     )
     t.commit(1, {pid3}, files, added_deletes=dels)
     pid7 = [r[2] for r in rows if r[0] == "u7"][0]
-    dels7 = t.stage_delete_files(
-        spark.createDataFrame([("u7", pid7)], "url string, _pid int"), epoch=2
+    files7, dels7 = t.stage_data_and_delete_files(
+        _tagged(spark, deletes=[("u7", pid7)]), epoch=2
     )
+    assert files7 == []
     t.commit(2, {pid7}, [], added_deletes=dels7)
 
     got = {r["url"]: r["val"] for r in t.lookup(["u3", "u7"]).collect()}

@@ -234,3 +234,54 @@ def test_incremental_read_applies_deletes(spark, tmp_path):
     assert bytes(inc["https://d1.example.com/1"]["html"]) == b"<p>v2</p>"
     # insert-then-delete inside the range: not resurrected
     assert "https://new/x" not in inc
+
+
+def test_mor_epoch_is_one_pid_aligned_pass(spark, tmp_path, monkeypatch):
+    """A merge-on-read epoch derives its data rows and its equality
+    deletes from ONE lsn-guarded join: the write plan holds one LWW
+    Window and scans the target's data files once, and each partition
+    gets at most one delete file. The batch is read from parquet, as a
+    source tail delivers it: a small, well-estimated batch is what let a
+    separate delete leg broadcast the batch and stream the target, one
+    delete file per target split per partition."""
+    import re
+
+    table = IceTable.create(spark, tmp_path / "t", PAGE_SCHEMA, num_partitions=2)
+    urls = {}
+    for e, host in enumerate("abc"):  # disjoint envelopes: 3 files per pid
+        urls[host] = [f"https://{host}/{i}" for i in range(40)]
+        rows = [
+            (100 * e + i + 1, "I", u, TS, f"<p>{u}</p>".encode(), "en")
+            for i, u in enumerate(urls[host])
+        ]
+        apply_epoch(table, spark.createDataFrame(rows, EV), e)
+    ev = [(1000 + i, "D", urls[h][i], TS, None, "en") for h in "abc" for i in range(3)]
+    ev += [
+        (2000 + i, "U", urls[h][10 + i], TS, b"<p>new</p>", "en")
+        for h in "abc"
+        for i in range(2)
+    ]
+    spark.createDataFrame(ev, EV).write.parquet(str(tmp_path / "ev"))
+
+    plans = []
+    write_conf = IceTable._write_conf
+
+    def spy(self, writer):
+        plans.append(writer._df._jdf.queryExecution().executedPlan().toString())
+        return write_conf(self, writer)
+
+    monkeypatch.setattr(IceTable, "_write_conf", spy)
+    s = apply_epoch(table, spark.read.parquet(str(tmp_path / "ev")), 3)
+    assert s.merge_mode == "mor"
+    (plan,) = plans
+    assert len(re.findall(r"^\W*Window \[", plan, re.M)) == 1, plan
+    # the target's data files are the scans reading the stored _lsn
+    assert len(re.findall(r"FileScan parquet .*ReadSchema: .*\b_lsn:", plan)) == 1, plan
+
+    per_pid: dict[int, int] = {}
+    for d in table.delete_entries():
+        per_pid[d["partition_id"]] = per_pid.get(d["partition_id"], 0) + 1
+    assert per_pid == {0: 1, 1: 1}
+    got = {r["url"]: r["text"] for r in table.read().collect()}
+    assert len(got) == 120 - 9
+    assert all(got[urls[h][10 + i]] == "new" for h in "abc" for i in range(2))
