@@ -107,10 +107,9 @@ def _ensure_cdc_fixture() -> Path:
 
 
 def _run_cdc(spark: SparkSession, events_dir: Path) -> DataFrame:
-    """Ingest a generated event log end to end (tail source → salted
-    repartition → Arrow-UDF extraction → Window-over-LSN LWW →
-    exactly-once MERGE with mid-stream schema evolution) and return the
-    final table state."""
+    """Ingest a generated event log end to end (tail source →
+    Window-over-LSN LWW → Arrow-UDF extraction → exactly-once MERGE with
+    mid-stream schema evolution) and return the final table state."""
     from datax_spark.icetable.table import IceTable
     from datax_spark.streaming.driver import EpochDriver
     from datax_spark.streaming.source import ChangeTailSource

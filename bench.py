@@ -2,15 +2,13 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric", "value", "unit": "sec", "queries": {...}, "sf": ...}.
 
-Two workload groups:
-
-* relational/dedup/similarity/text headline queries from the driver
-  contract (__spark_entry__.QUERIES), each executed to completion via the
-  noop sink (full execution, no driver-collect overhead);
-* the engine's native workload — the CDC ingest loop — on a generated
-  event log, reported both as wall seconds (in "queries" as cdc_ingest)
-  and as end-to-end applied change-events/sec ("cdc_events_per_sec",
-  the north-rule metric; scaling evidence in BENCH/BASELINE.md).
+The headline queries are relational/dedup/similarity/text queries from
+the driver contract (__spark_entry__.QUERIES), each executed to
+completion via the noop sink (full execution, no driver-collect
+overhead); "value" is their summed wall. The CDC ingest path has its
+own benchmark, ``perfbench/`` (bulk backfill, merge-on-read trickle,
+reads beside writes), which imports ``_cached_event_log`` and
+``_node_health_probe`` from here.
 """
 
 from __future__ import annotations
@@ -123,9 +121,6 @@ HEADLINE = [
     "point_lookup",
 ]
 
-CDC_EVENTS = int(os.environ.get("DATAX_BENCH_EVENTS", "1000000"))
-
-
 def _cached_event_log(spec) -> Path:
     """Deterministic log is a pure function of the spec — generate once
     per spec, reuse across bench runs (incl. the two scaling runs)."""
@@ -144,47 +139,6 @@ def _cached_event_log(spec) -> Path:
         generate_event_log(d, spec)
         done.touch()
     return d
-
-
-def run_cdc(spark, n_events: int) -> tuple[float, int]:
-    """Generate an event log and ingest it; returns (wall_sec, n_events)."""
-    from pyspark.sql import types as T
-
-    from datax_spark.datagen.generator import EventLogSpec
-    from datax_spark.icetable.table import IceTable
-    from datax_spark.streaming.driver import EpochDriver
-    from datax_spark.streaming.source import ChangeTailSource
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("warc_ts", T.TimestampType()),
-            T.StructField("html", T.BinaryType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    work = Path(tempfile.mkdtemp(prefix="datax_bench_"))
-    try:
-        spec = EventLogSpec(
-            n_events=n_events,
-            n_urls=max(n_events // 5, 100),
-            n_domains=100,
-            n_epochs=4,
-            evolve_at_epoch=3,
-            seed=42,
-        )
-        events_dir = _cached_event_log(spec)
-        table = IceTable.create(spark, work / "table", schema, num_partitions=32)
-        driver = EpochDriver(
-            spark, ChangeTailSource(spark, events_dir), table, work / "ckpt"
-        )
-        t0 = time.monotonic()
-        driver.run()
-        wall = time.monotonic() - t0
-        return wall, n_events
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _node_health_probe() -> dict:
@@ -248,23 +202,17 @@ def main() -> None:
             "exec_s": round(t2 - t1, 3),
         }
 
-    cdc_wall, n_events = run_cdc(spark, CDC_EVENTS)
-    timings["cdc_ingest"] = round(cdc_wall, 3)
-    split["cdc_ingest"] = {"build_s": 0.0, "exec_s": round(cdc_wall, 3)}
-
     total = round(sum(timings.values()), 3)
     print(
         json.dumps(
             {
-                "metric": "headline_queries_plus_cdc_ingest_wall",
+                "metric": "headline_queries_wall",
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
                 "queries_split": split,
                 "timing": "construction+exec",
                 "sf": sf,
-                "cdc_events": n_events,
-                "cdc_events_per_sec": round(n_events / cdc_wall, 1),
                 "cores": cpus,
                 "node_health": _node_health_probe(),
             }

@@ -5,7 +5,4 @@ from datax_spark.functions.extract import (  # noqa: F401
     extract_title,
     extract_title_udf,
 )
-from datax_spark.functions.hashing import (  # noqa: F401
-    salted_key,
-    url_partition,
-)
+from datax_spark.functions.hashing import url_partition  # noqa: F401

@@ -1,4 +1,4 @@
-"""Key partitioning + skew salting (SURVEY.md §2.2 P4, §2.7 T8).
+"""Key partitioning (SURVEY.md §2.2 P4, §2.7 T8).
 
 The engine's physical layout is **url-hash partitioning**: a row lands in
 partition ``pmod(murmur3(url), num_partitions)`` — murmur3 with seed 42,
@@ -9,12 +9,11 @@ different hash would silently mis-prune and mis-route MERGE, so loading
 one is a hard error, not a wrong answer. Deterministic partitioning is
 what makes replay produce identical file layouts (BASELINE.json:6).
 
-Hot-domain skew (zipf-distributed domains) is handled with **explicit
-salting**: a salt derived from a second, independent hash of a
-high-cardinality column (``lsn``) splits one hot key across
-``salt_factor`` reducers. Salting is applied only where a full shuffle on
-the raw key would bottleneck on one reducer (the LWW pre-combine, the
-extraction repartition); the salt never reaches storage.
+Hot-domain skew (zipf-distributed domains) needs no salt. Hashing the
+full url spreads one hot domain's pages across all partitions, and a hot
+single url collapses before any shuffle: the LWW Window plans a partial
+top-1 per key on the map side (operators/lww.py), so each mapper ships
+one row per key whatever its event count.
 """
 
 from __future__ import annotations
@@ -43,16 +42,3 @@ def url_partition(key: Column | str, num_partitions: int) -> Column:
     c = F.col(key) if isinstance(key, str) else key
     return F.pmod(F.hash(c), F.lit(num_partitions)).cast("int")
 
-
-def salted_key(key: Column | str, salt_from: Column | str, salt_factor: int) -> Column:
-    """Composite shuffle key (key, salt) that splits hot keys.
-
-    ``salt_from`` must be high-cardinality (e.g. lsn) so the salt is
-    deterministic — replay partitions identically (no rand()).
-    """
-    k = F.col(key) if isinstance(key, str) else key
-    s = F.col(salt_from) if isinstance(salt_from, str) else salt_from
-    return F.struct(
-        k.alias("k"),
-        F.pmod(F.xxhash64(s), F.lit(salt_factor)).cast("int").alias("salt"),
-    )

@@ -21,8 +21,7 @@ driver's DuckDB oracle):
 
 Full PSL-based registrable-domain extraction is out of scope (the
 public-suffix list is a data file, not logic); ``url_domain`` returns
-the www-stripped host, which is what the hot-DOMAIN salting heuristics
-key on.
+the www-stripped host (the domain masking policy keys on it).
 """
 
 from __future__ import annotations
@@ -92,8 +91,7 @@ def canonical_url(url: Column) -> Column:
 
 
 def url_domain(url: Column) -> Column:
-    """Lowercased, www- and port-stripped host — the hot-domain salting
-    key."""
+    """Lowercased, www- and port-stripped host."""
     host = F.lower(url_parts(url)["host"])
     host = F.regexp_replace(host, "^www\\.", "")
     return F.regexp_replace(host, ":[0-9]+$", "")

@@ -207,6 +207,14 @@ def _column_stats(
     return out
 
 
+def _data_rows(df: DataFrame) -> DataFrame:
+    """Tag every row of ``df`` as a data row (``_dl = 0``) for the staged
+    write. Not ``F.lit(0)``: Catalyst folds a literal out of the staged
+    sort, the writer then re-sorts by (_dl, _pid) alone, and the files
+    lose their key order."""
+    return df.withColumn("_dl", F.col("_pid") * 0)
+
+
 def _schema_to_json(schema: T.StructType) -> dict:
     return json.loads(schema.json())
 
@@ -976,13 +984,17 @@ class IceTable:
         # reads per epoch at E epochs of debt; the endurance drive
         # measured epochs growing 3s → 230s between compactions from it.
         # The wide data rows still never shuffle: both joins broadcast.
+        # ONE path → epoch side table serves both joins (a data file's
+        # added_epoch, a delete file's epoch): the two broadcasts are the
+        # same plan, so Spark builds it once and reuses the exchange.
         key = self.key_column
         _file = F.regexp_replace(F.input_file_name(), "^[a-zA-Z]+:(//)?", "")
-        ae_map = F.broadcast(
+        epochs = F.broadcast(
             self._local_df(
-                [(str(self.root / f["path"]), int(f.get("added_epoch", 0))) for f in files],
+                [(str(self.root / f["path"]), int(f.get("added_epoch", 0))) for f in files]
+                + [(str(self.root / d["path"]), int(d["epoch"])) for d in deletes],
                 T.StructType(
-                    [T.StructField("_file", T.StringType()), T.StructField("_ae", T.LongType())]
+                    [T.StructField("_file", T.StringType()), T.StructField("_ep", T.LongType())]
                 ),
             )
         )
@@ -990,22 +1002,19 @@ class IceTable:
         # row with _ae null — the null propagates through the anti-join
         # condition as not-true, so the row survives rather than being
         # silently dropped
-        df = _scan(files).withColumn("_file", _file).join(ae_map, "_file", "left")
-        de_map = F.broadcast(
-            self._local_df(
-                [(str(self.root / d["path"]), int(d["epoch"])) for d in deletes],
-                T.StructType(
-                    [T.StructField("_file", T.StringType()), T.StructField("_de", T.LongType())]
-                ),
-            )
+        df = (
+            _scan(files)
+            .withColumn("_file", _file)
+            .join(epochs, "_file", "left")
+            .withColumnRenamed("_ep", "_ae")
         )
         dk = (
             self.spark.read.schema(T.StructType([T.StructField(key, T.StringType())]))
             .parquet(*[str(self.root / d["path"]) for d in deletes])
             .withColumn("_file", _file)
-            .join(de_map, "_file")
+            .join(epochs, "_file")
             .groupBy(F.col(key).alias("_dk"))
-            .agg(F.max("_de").alias("_de"))
+            .agg(F.max("_ep").alias("_de"))
         )
         return df.join(
             F.broadcast(dk),
@@ -1330,42 +1339,18 @@ class IceTable:
         the new partition_spec atomically."""
         if new_num_partitions == self.num_partitions:
             return self.current_version()
-        old_files = self.manifest_entries()
-        old_dels = self.delete_entries()
         df = self.read(with_lsn=True)
         meta = self.metadata()
-        # route by the NEW partitioning; stage under the current table
-        # (num_partitions still old) via an explicit repartition
-        df = df.withColumn("_pid", url_partition(self.key_column, new_num_partitions))
-        staging_df = df.repartition(new_num_partitions, F.col(self.key_column))
-        # temporarily publish the new spec AFTER staging files: stage
-        # directly (bypassing stage_data_files' aligned check which uses
-        # the old num_partitions for the repartition width)
-        staging = self.root / f"_staging-rebucket-{uuid.uuid4().hex[:8]}"
-        self._write_conf(
-            staging_df.sortWithinPartitions("_pid", self.key_column)
-            .write.partitionBy("_pid")
-            .mode("overwrite")
-        ).parquet(str(staging))
+        # route by the NEW partitioning: repartitioned here to the new
+        # count, the staged write needs no exchange of its own (task
+        # index == new pid); the new spec publishes after the files
         key = self.key_column
-        stats_schema = self._stats_schema()
-
-        def entry(dest: Path, pid: int, fmeta: "pq.FileMetaData") -> dict:
-            min_url, max_url = _key_stats(fmeta, key)
-            e = {
-                "path": str(dest.relative_to(self.root)),
-                "partition_id": pid,
-                "rows": fmeta.num_rows,
-                "min_url": min_url,
-                "max_url": max_url,
-                "added_epoch": meta["summary"].get("last_epoch", 0),
-            }
-            if stats_schema is not None:
-                e["stats"] = _column_stats(fmeta, stats_schema, key)
-            return e
-
-        new_files = self._publish_staged(staging, "_pid", "rb", entry)
-        self._attach_blooms(new_files)
+        df = _data_rows(
+            df.withColumn("_pid", url_partition(key, new_num_partitions))
+        ).repartition(new_num_partitions, F.col(key))
+        new_files, _ = self._stage(
+            df, meta["summary"].get("last_epoch", 0), aligned=True, bloom_compose=None
+        )
         # ONE atomic snapshot: full new manifest set AND the new
         # partition_spec together — no window where new-layout files pair
         # with the old spec (pruning under a mismatched spec would probe
@@ -1995,7 +1980,6 @@ class IceTable:
         self,
         df: DataFrame,
         epoch: int,
-        pid_column: str = "_pid",
         aligned: bool = False,
         bloom_compose: tuple[DataFrame, dict[int, list[dict]], dict[int, int]] | None = None,
     ) -> list[dict]:
@@ -2027,22 +2011,7 @@ class IceTable:
         one-file-per-partition layout does, and apply_epoch pins the
         configs that make it hold.
         """
-        staging = self.root / f"_staging-e{epoch:05d}-{uuid.uuid4().hex[:8]}"
-        key = self.key_column
-        num_p = self.num_partitions
-        if not aligned:
-            df = df.repartition(num_p, F.col(key))
-        pre = self._begin_bloom_compose(bloom_compose)
-        self._write_conf(
-            df.sortWithinPartitions(pid_column, key)
-            .write.partitionBy(pid_column)
-            .mode("overwrite")
-        ).parquet(str(staging))
-        entries = self._publish_staged(
-            staging, pid_column, f"e{epoch:05d}", self._data_entry_fn(epoch)
-        )
-        self._attach_blooms(entries, pre=pre)
-        return entries
+        return self._stage(_data_rows(df), epoch, aligned, bloom_compose)[0]
 
     def _data_entry_fn(self, epoch: int):
         """Manifest-entry builder for the staged data files of ``epoch``
@@ -2069,7 +2038,6 @@ class IceTable:
     def _publish_staged(
         self,
         staging: Path,
-        pid_column: str,
         name_prefix: str,
         entry_fn,
     ) -> list[dict]:
@@ -2082,7 +2050,7 @@ class IceTable:
         references them."""
         staged = [
             (int(pid_dir.name.split("=")[1]), part)
-            for pid_dir in sorted(staging.glob(f"{pid_column}=*"))
+            for pid_dir in sorted(staging.glob("_pid=*"))
             for part in sorted(pid_dir.glob("*.parquet"))
         ]
         with ThreadPoolExecutor(max_workers=min(16, max(len(staged), 1))) as ex:
@@ -2107,7 +2075,6 @@ class IceTable:
         self,
         df: DataFrame,
         epoch: int,
-        pid_column: str = "_pid",
         aligned: bool = False,
         bloom_compose: tuple[DataFrame, dict[int, list[dict]], dict[int, int]] | None = None,
     ) -> tuple[list[dict], list[dict]]:
@@ -2124,6 +2091,19 @@ class IceTable:
         the read path's delete scan names an explicit key-only schema
         (``_read_files``). Returns (data manifest entries, delete
         entries)."""
+        return self._stage(df, epoch, aligned, bloom_compose)
+
+    def _stage(
+        self,
+        df: DataFrame,
+        epoch: int,
+        aligned: bool,
+        bloom_compose: tuple[DataFrame, dict[int, list[dict]], dict[int, int]] | None,
+    ) -> tuple[list[dict], list[dict]]:
+        """The one staged write behind both public staging calls and
+        ``rebucket``: ``df`` carries ``_pid`` and a ``_dl`` tag (0 data,
+        1 equality-delete) and is written by ONE Spark job. Returns
+        (data manifest entries, delete entries)."""
         key = self.key_column
         if not aligned:
             df = df.repartition(self.num_partitions, F.col(key))
@@ -2134,8 +2114,8 @@ class IceTable:
         # own local sort — dropping the within-file key sort — if ours
         # didn't already satisfy it
         self._write_conf(
-            df.sortWithinPartitions("_dl", pid_column, key)
-            .write.partitionBy("_dl", pid_column)
+            df.sortWithinPartitions("_dl", "_pid", key)
+            .write.partitionBy("_dl", "_pid")
             .mode("overwrite")
         ).parquet(str(staging))
 
@@ -2149,11 +2129,9 @@ class IceTable:
             }
 
         entries = self._publish_staged(
-            staging / "_dl=0", pid_column, f"e{epoch:05d}", self._data_entry_fn(epoch)
+            staging / "_dl=0", f"e{epoch:05d}", self._data_entry_fn(epoch)
         )
-        dels = self._publish_staged(
-            staging / "_dl=1", pid_column, f"d-e{epoch:05d}", del_entry
-        )
+        dels = self._publish_staged(staging / "_dl=1", f"d-e{epoch:05d}", del_entry)
         shutil.rmtree(staging, ignore_errors=True)
         self._attach_blooms(entries, pre=pre)
         return entries, dels

@@ -13,8 +13,7 @@ consistent end to end) and fully deterministic:
   pack domain (default: ``source``); a document's pack is
   ``floor(cum_tokens_before / context)``. One window shuffle keyed on
   the pack domain. Packing globally would serialize on one reducer —
-  the domain column IS the parallelism knob, exactly like the salting
-  story (a real pipeline packs per shard/source; cross-domain packing
+  the domain column IS the parallelism knob (a real pipeline packs per shard/source; cross-domain packing
   only changes which <2*context-token tail fragments exist).
 """
 

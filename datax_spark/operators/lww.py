@@ -22,15 +22,11 @@ Physical strategies — same semantics, different shuffle profiles:
   fallbackThreshold (128 groups), paying the wide-row sort twice —
   measured ~1.5x slower than ``window`` on payload rows. Fine for
   narrow rows.
-* ``salted_window`` — two-phase resolve within (key, salt) then across
-  salts. Since the partial WindowGroupLimit already pre-collapses hot
-  keys map-side, explicit salting only pays off when a single key's
-  PER-MAPPER winners still overload one reducer (extreme: one key
-  dominating the whole batch).
 
-Default ``window``: the rule fixes the *semantics* (Window-over-LSN);
-the physical strategy is the engine's to choose, exactly as Catalyst
-picks physical plans for declared semantics.
+``apply_epoch`` always resolves with ``window``. Hot keys need no salt:
+the partial top-1 before the exchange leaves one row per (mapper, key)
+however hot the key, and url-hash partitioning spreads hot domains
+across partitions.
 """
 
 from __future__ import annotations
@@ -38,15 +34,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datax_spark.functions.hashing import salted_key
-
 
 def lww_resolve(
     df: DataFrame,
     key: str = "url",
     order: str = "lsn",
     strategy: str = "window",
-    salt_factor: int = 16,
 ) -> DataFrame:
     """One row per ``key``: the event with the maximum ``order`` value."""
     cols = df.columns
@@ -63,18 +56,5 @@ def lww_resolve(
             df.groupBy(key)
             .agg(F.max_by(payload, F.col(order)).alias("_row"))
             .select([F.col(f"_row.{c}").alias(c) for c in cols])
-        )
-    if strategy == "salted_window":
-        pre = (
-            df.withColumn("_sk", salted_key(key, order, salt_factor))
-            .groupBy("_sk")
-            .agg(F.max_by(F.struct(*[F.col(c) for c in cols]), F.col(order)).alias("_row"))
-            .select([F.col(f"_row.{c}").alias(c) for c in cols])
-        )
-        w = Window.partitionBy(key).orderBy(F.col(order).desc())
-        return (
-            pre.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
         )
     raise ValueError(f"unknown lww strategy: {strategy}")

@@ -18,10 +18,13 @@ One epoch application, end to end::
 Scale notes (the parts that matter at 10^10 events / 100 TB):
 
 * LWW runs BEFORE extraction, so the expensive UDF sees one row per key,
-  not one per event. Default strategy is ``window`` — with wide
+  not one per event. It is always the ``window`` plan — with wide
   (html-payload) rows it measured faster than the struct max_by at both
   8 and 32 cores (the object-hash aggregate falls back to sort-based
-  past 128 groups, paying the sort twice).
+  past 128 groups, paying the sort twice). Skew needs no salt: the
+  Window's partial top-1 before the exchange collapses a hot key to one
+  row per mapper, and url-hash partitioning spreads hot domains across
+  partitions.
 * The extraction UDF lives in the merge projection — the plan's single
   terminal stage — so it executes exactly once per epoch. Earlier
   drafts extracted into a persisted batch; under memory pressure
@@ -67,6 +70,12 @@ from datax_spark.operators.quarantine import check_error_budget, split_dirty
 
 # columns that exist on the wire but never reach storage
 _WIRE_ONLY = ("op", "lsn")
+# batches with more distinct keys than this skip the per-file bloom
+# probe: dense batches hit every file anyway
+BLOOM_PRUNE_MAX_KEYS = 100_000
+# auto merge picks merge-on-read when a copy-on-write rewrite would move
+# more than this many target rows per batch key
+MOR_REWRITE_RATIO = 4.0
 
 
 @dataclass
@@ -81,7 +90,6 @@ class EpochStats:
     affected_partitions: int = 0
     wall_ms: int = 0
     evolved_columns: list[str] = field(default_factory=list)
-    lww_strategy_used: str | None = None
     merge_mode: str | None = None  # "cow" | "mor"
 
 
@@ -91,13 +99,9 @@ def apply_epoch(
     epoch: int,
     start_offset: int = 0,
     end_offset: int = 0,
-    lww_strategy: str = "auto",
     error_budget: float | None = None,
     extract: bool = True,
-    quarantine: bool = True,
-    bloom_prune_max_keys: int = 100_000,
     merge_strategy: str = "auto",
-    mor_rewrite_ratio: float = 4.0,
 ) -> EpochStats:
     """Apply one change-event batch to the table, exactly once.
 
@@ -108,7 +112,7 @@ def apply_epoch(
     copies at read time (write cost O(batch), paid back by compaction —
     best for delete-heavy / sparse-update epochs); ``auto`` picks mor
     when the copy-on-write rewrite would move more than
-    ``mor_rewrite_ratio`` rows per batch key. The decision inputs
+    ``MOR_REWRITE_RATIO`` rows per batch key. The decision inputs
     (manifest state + batch stats) are deterministic, so replay from
     scratch re-makes identical choices."""
     t0 = time.monotonic()
@@ -196,29 +200,13 @@ def apply_epoch(
     stats.rows_in = sum(rows_in_by_pid.values())
     stats.rows_dirty = sum(dirty_by_pid.values())
     check_error_budget(stats.rows_in + stats.rows_dirty, stats.rows_dirty, error_budget)
-    if quarantine and stats.rows_dirty > 0:
+    if stats.rows_dirty > 0:
         # routed, not dropped (DataX dirty-record collector): the write
         # costs a job only on epochs that actually have dirty rows
         table.write_quarantine(dirty, epoch)
 
-    # ---- wide resolve, strategy chosen from the batch's skew profile --- #
-    # "auto": the narrow stats give events-per-key per partition for
-    # free; a partition averaging >32 events/key signals hot keys →
-    # pre-split them across salted reducers before the wide shuffle
-    # (explicit hot-domain salting, BASELINE.json north star). The salt
-    # is derived from lsn (deterministic), so replay partitions
-    # identically.
-    if lww_strategy == "auto":
-        keys_by_pid = {r["_pid"]: r["n_keys"] for r in pid_rows}
-        heat = max(
-            (rows_in_by_pid.get(p, 0) / k for p, k in keys_by_pid.items() if k),
-            default=1.0,
-        )
-        chosen = "salted_window" if heat > 32 else "window"
-    else:
-        chosen = lww_strategy
-    stats.lww_strategy_used = chosen
-    resolved = lww_resolve(clean, key=key, order="lsn", strategy=chosen)
+    # ---- wide resolve: one Window-over-LSN shuffle ------------------- #
+    resolved = lww_resolve(clean, key=key, order="lsn", strategy="window")
     resolved = resolved.withColumn("_pid", url_partition(key, num_p))
 
     affected = {r["_pid"] for r in pid_rows}
@@ -266,7 +254,7 @@ def apply_epoch(
     # partition's [min,max] envelope. The probe is one extra narrow job,
     # so it is gated on batch size — dense batches hit every file anyway.
     total_keys = sum(r["n_keys"] for r in pid_rows)
-    keys_df = narrow.select(key) if 0 < total_keys <= bloom_prune_max_keys else None
+    keys_df = narrow.select(key) if 0 < total_keys <= BLOOM_PRUNE_MAX_KEYS else None
     target, rewrite_files = table.read_partitions(
         affected,
         with_lsn=True,
@@ -285,7 +273,7 @@ def apply_epoch(
     use_mor = merge_strategy == "mor" or (
         merge_strategy == "auto"
         and total_keys > 0
-        and rewrite_rows > mor_rewrite_ratio * total_keys
+        and rewrite_rows > MOR_REWRITE_RATIO * total_keys
     )
     stats.merge_mode = "mor" if use_mor else "cow"
 

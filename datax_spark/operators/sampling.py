@@ -2,7 +2,7 @@
 pipeline runs LAST (after cleaning/dedup): carve a reproducible sample
 or assemble a per-source token-budget mix. No RNG anywhere: replaying
 the pipeline regenerates byte-identical samples (the same property the
-CDC engine's salting and k-means sampling rely on).
+CDC engine's replay and k-means sampling rely on).
 
 * ``deterministic_sample`` gates on an md5 prefix of the key — a pure
   projection + filter (codegen, no shuffle), engine-portable (the

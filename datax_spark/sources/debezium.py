@@ -8,7 +8,7 @@ the bridge in both directions:
 
 * ``parse_debezium``   — envelope JSON strings → canonical change-event
   batches ``(lsn, op ∈ {I,U,D}, key, *payload)``, the schema every
-  downstream stage (quarantine → salt → LWW → ``apply_epoch`` MERGE)
+  downstream stage (quarantine → LWW → ``apply_epoch`` MERGE)
   already consumes. A Kafka source on a real cluster plugs in as
   ``kafka_df.select(col("value").cast("string"))`` → this parse → the
   same exactly-once sink (cluster.py wires the endpoints).

@@ -270,7 +270,6 @@ class EpochDriver:
         table: IceTable,
         checkpoint_dir: str | Path,
         shards_per_epoch: int = 1,
-        lww_strategy: str = "auto",
         error_budget: float | None = None,
         extract: bool = True,
         merge_strategy: str = "auto",
@@ -293,7 +292,6 @@ class EpochDriver:
         (self.ckpt / "offsets").mkdir(parents=True, exist_ok=True)
         (self.ckpt / "commits").mkdir(parents=True, exist_ok=True)
         self.shards_per_epoch = shards_per_epoch
-        self.lww_strategy = lww_strategy
         self.error_budget = error_budget
         self.extract = extract
         self.merge_strategy = merge_strategy
@@ -398,7 +396,6 @@ class EpochDriver:
             epoch,
             start_offset=start,
             end_offset=end,
-            lww_strategy=self.lww_strategy,
             error_budget=self.error_budget,
             extract=self.extract,
             merge_strategy=self.merge_strategy,

@@ -142,9 +142,10 @@ def test_deletes_remove_rows(spark, tmp_path):
     assert [r["url"] for r in rows] == ["https://b/2"]
 
 
-def test_auto_strategy_salts_hot_keys(spark, tmp_path):
-    """auto LWW: a batch dominated by one hot url (events/key >> 32)
-    switches to salted_window; result still matches the pure fold."""
+def test_hot_key_resolves_to_last_write(spark, tmp_path):
+    """A batch dominated by one hot url (200 events on one key) resolves
+    through the one Window-over-LSN plan to the pure fold's answer: the
+    hot key keeps its max-lsn version, the cold keys are untouched."""
     import datetime as dt
 
     table = IceTable.create(spark, tmp_path / "t", PAGE_SCHEMA, num_partitions=4)
@@ -156,19 +157,10 @@ def test_auto_strategy_salts_hot_keys(spark, tmp_path):
         hot + cold,
         "lsn long, op string, url string, warc_ts timestamp, html binary, lang string",
     )
-    stats = apply_epoch(table, batch, 0, lww_strategy="auto")
-    assert stats.lww_strategy_used == "salted_window"
+    apply_epoch(table, batch, 0)
     rows = {r["url"]: r for r in table.read().collect()}
     assert bytes(rows["https://hot/1"]["html"]) == b"<p>v200</p>"
     assert len(rows) == 4
-
-    # a uniform batch stays on the plain window strategy
-    uni = spark.createDataFrame(
-        [(2000 + i, "I", f"https://u/{i}", ts, b"<p>u</p>", "en") for i in range(50)],
-        "lsn long, op string, url string, warc_ts timestamp, html binary, lang string",
-    )
-    stats2 = apply_epoch(table, uni, 1, lww_strategy="auto")
-    assert stats2.lww_strategy_used == "window"
 
 
 def test_extraction_evolves_missing_text_column(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""W1 last-writer-wins: all three physical strategies agree with each
+"""W1 last-writer-wins: both physical strategies agree with each
 other and with the sequential pure-python fold (hypothesis property)."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from hypothesis import strategies as st
 
 from datax_spark.operators.lww import lww_resolve
 
-STRATEGIES = ("window", "max_by", "salted_window")
+STRATEGIES = ("window", "max_by")
 
 
 def _df(spark, events):

@@ -213,7 +213,8 @@ def test_mor_read_side_tables_are_jvm_local_broadcasts(spark, tmp_path):
     as JVM LocalRelations, not PythonRDD scans: a stage reading a
     LogicalRDD waits for a Python worker before its first row. The side
     tables stay broadcast hash joins — a BroadcastExchange directly over
-    a LocalTableScan. Plans only; nothing here runs the returned frames."""
+    a LocalTableScan. Plans only, except one run read whose final plan
+    must broadcast its one side table once and reuse the exchange."""
     import datetime as dt
 
     from pyspark.sql import types as T
@@ -249,8 +250,8 @@ def test_mor_read_side_tables_are_jvm_local_broadcasts(spark, tmp_path):
     )
     assert table.delete_entries(), "fixture must carry merge-on-read delete debt"
 
-    def local_broadcasts(df) -> int:
-        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    def local_broadcasts(plan: str) -> int:
+        lines = plan.splitlines()
         return sum(
             "BroadcastExchange" in a and "LocalTableScan" in b
             for a, b in zip(lines, lines[1:])
@@ -266,6 +267,14 @@ def test_mor_read_side_tables_are_jvm_local_broadcasts(spark, tmp_path):
         logical = df._jdf.queryExecution().optimizedPlan().toString()
         assert "LogicalRDD" not in logical, f"{name}:\n{logical}"
         assert "LocalRelation" in logical, f"{name}:\n{logical}"
-        assert local_broadcasts(df) == n_local, (
-            f"{name}:\n{df._jdf.queryExecution().executedPlan().toString()}"
-        )
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert local_broadcasts(plan) == n_local, f"{name}:\n{plan}"
+
+    # the data and delete joins share ONE path → epoch side table: run,
+    # it is broadcast once (one job) and the other join reuses it
+    df = table.read_partitions({0, 1})[0]
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert local_broadcasts(final) == 1, plan
+    assert "ReusedExchange" in final, plan
