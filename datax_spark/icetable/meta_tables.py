@@ -76,10 +76,7 @@ def snapshots(table: IceTable) -> DataFrame:
     """One row per RETAINED version (Iceberg's ``.snapshots``;
     ``operation`` summarizes what the commit did where recorded)."""
     rows = []
-    for v in sorted(
-        int(p.name[1:].split(".")[0])
-        for p in table.meta_dir.glob("v*.metadata.json")
-    ):
+    for v in table._versions():
         m = table.metadata(v)
         s = m.get("summary") or {}
         if "compacted_pid" in s:

@@ -5,7 +5,7 @@ The production problem: a recrawl batch of N new pages must be checked
 against a corpus of M >> N already-ingested pages. The exact answer is
 an anti-join, but at 100 TB the corpus side of that join is the whole
 lake. The standard fix (used by every incremental-ingest system,
-including this engine's per-file key blooms in ``icetable/table.py``) is
+including this engine's per-file key blooms in ``icetable/bloom.py``) is
 a Bloom filter built ONCE over the corpus keys and broadcast to the
 batch: probes are map-side, the corpus is never re-read, false
 positives are resolved by an exact join against only the flagged rows.

@@ -394,37 +394,3 @@ class AggViewSync:
             json.dump(self.meta, f)
         os.replace(tmp, self.root / "cursor.json")
 
-
-class JoinViewSync:
-    """Driver-registrable maintained JOIN view: adapts sync_join_view
-    to the ``.sync(table)`` protocol. The driver passes whichever
-    source IT ingests; both sides advance (the other source's changes
-    are picked up too). ``meta`` exposes the cursor of the driver's
-    table so snapshot expiry retains it."""
-
-    def __init__(self, view, table_a, table_b):
-        self.view = view
-        self.a = table_a
-        self.b = table_b
-
-    @property
-    def meta(self) -> dict:
-        import hashlib
-
-        tag = (
-            "joinview_"
-            + hashlib.md5(str(self.view.root).encode()).hexdigest()[:12]
-        )
-        try:
-            v = self.a.resolve_ref(tag)
-        except KeyError:
-            v = 0
-        return {"source": {"path": str(self.a.root), "version": v}}
-
-    def sync(self, table) -> dict:
-        if str(table.root) not in (str(self.a.root), str(self.b.root)):
-            raise ValueError(
-                f"join view sources are {self.a.root} and {self.b.root}; "
-                f"got {table.root}"
-            )
-        return sync_join_view(self.view, self.a, self.b)

@@ -9,7 +9,8 @@ ALL the interleaved dimensions at once — the layout pass behind
 writes it makes the footer min/max row-group statistics selective on
 every clustered column (Spark's scan skips row groups on pushed
 filters for any column); IceTable's own key min/max + bloom pruning
-(`icetable/table.py`) stays key-column-specific and is unaffected.
+(`icetable/scan.py`, `icetable/bloom.py`) stays key-column-specific
+and is unaffected.
 
 Everything is codegen: the interleave is a fixed fan of shift/mask/or
 expressions (no UDF), and the layout pass is one

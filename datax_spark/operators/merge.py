@@ -66,7 +66,11 @@ from datax_spark.functions.extract import extract_text_udf
 from datax_spark.functions.hashing import url_partition
 from datax_spark.icetable.table import IceTable
 from datax_spark.operators.lww import lww_resolve
-from datax_spark.operators.quarantine import check_error_budget, split_dirty
+from datax_spark.operators.quarantine import (
+    check_error_budget,
+    dirty_predicate,
+    split_dirty,
+)
 
 # columns that exist on the wire but never reach storage
 _WIRE_ONLY = ("op", "lsn")
@@ -153,7 +157,6 @@ def apply_epoch(
     # The wide plan (`resolved`, with extraction) is NOT persisted and
     # NOT materialized here: its single consumer is the merge-write
     # pass below, so payload bytes cross the engine exactly once.
-    from datax_spark.operators.quarantine import dirty_predicate
 
     # the bloom probe and compose need only the batch key SET: duplicate
     # keys set the same bloom bits and hit the same files
@@ -418,11 +421,16 @@ def apply_epoch(
             conf.set(k, v)
 
     # ---- upsert/delete counts from resolved (1 row per key) ------------ #
-    by_pid = {r["_pid"]: r for r in pid_rows}
+    by_pid = {r["_pid"]: r for r in pid_rows if r["_pid"] in affected}
     lineage_rows = []
     commit_wall = int((time.monotonic() - t0) * 1000)
-    for pid in sorted(affected):
-        r = by_pid[pid]
+    # pids outside `affected` (only dirty rows, or already committed on a
+    # replay) still get a zero lineage row so the epoch's rows_dirty
+    # accounting is complete (quarantine routing is observable per
+    # partition even when nothing clean landed there)
+    zero = {"max_lsn": None, "n_keys": 0, "n_del": 0, "rows_in": 0}
+    for pid in sorted(affected | set(dirty_by_pid)):
+        r = by_pid.get(pid, zero)
         stats.rows_upserted += r["n_keys"] - r["n_del"]
         stats.rows_deleted += r["n_del"]
         lineage_rows.append(
@@ -432,7 +440,7 @@ def apply_epoch(
                 "start_offset": start_offset,
                 "end_offset": end_offset,
                 "lsn_watermark": r["max_lsn"],
-                "rows_in": rows_in_by_pid.get(pid, 0),
+                "rows_in": int(r["rows_in"]),
                 "rows_upserted": r["n_keys"] - r["n_del"],
                 "rows_deleted": r["n_del"],
                 # per-pid (NOT the epoch total stamped on every row —
@@ -440,25 +448,6 @@ def apply_epoch(
                 # injected dirty count exactly once)
                 "rows_dirty": dirty_by_pid.get(pid, 0),
                 "commit_id": None,  # filled below
-                "wall_ms": commit_wall,
-            }
-        )
-    # pids that saw ONLY dirty rows still get a lineage row so the
-    # epoch's rows_dirty accounting is complete (quarantine routing is
-    # observable per partition even when nothing clean landed there)
-    for pid in sorted(set(dirty_by_pid) - affected):
-        lineage_rows.append(
-            {
-                "checkpoint_epoch": epoch,
-                "partition_id": pid,
-                "start_offset": start_offset,
-                "end_offset": end_offset,
-                "lsn_watermark": None,
-                "rows_in": 0,
-                "rows_upserted": 0,
-                "rows_deleted": 0,
-                "rows_dirty": dirty_by_pid[pid],
-                "commit_id": None,
                 "wall_ms": commit_wall,
             }
         )

@@ -145,22 +145,6 @@ def pq_encode(
     )
 
 
-def pq_decode(codes: Column, codebook_rows: list[tuple[int, int, list[float]]]) -> Column:
-    """Reconstruction from literal codebook rows (test/diagnostic path):
-    concat of the m looked-up centroids."""
-    by_sub: dict[int, dict[int, list[float]]] = {}
-    for sub, code, cent in codebook_rows:
-        by_sub.setdefault(sub, {})[code] = cent
-    parts = []
-    for sub in sorted(by_sub):
-        expr = F.array().cast("array<double>")
-        for code, cent in sorted(by_sub[sub].items()):
-            lit = F.array(*[F.lit(float(x)) for x in cent])
-            expr = F.when(F.element_at(codes, sub + 1) == code, lit).otherwise(expr)
-        parts.append(expr)
-    return F.concat(*parts)
-
-
 def adc_lut(
     queries: DataFrame,
     codebook: DataFrame,

@@ -272,9 +272,9 @@ def test_bloom_compose_job_joins_callers_job_group(spark, tmp_path):
     urls = [f"https://a/{i}" for i in range(200)]
     apply_epoch(table, _batch(spark, urls, 1), 0)
 
-    path = inspect.getsourcefile(IceTable)
     sites = set()
     for fn in (IceTable._begin_bloom_compose, IceTable._bloom_words_for_keys):
+        path = inspect.getsourcefile(fn)
         src, first = inspect.getsourcelines(fn)
         sites |= {f"{path}:{n}" for n in range(first, first + len(src))}
 
